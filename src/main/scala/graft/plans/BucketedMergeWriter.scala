@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 import graft.Materialize.MaterializeOps
 
 /** S4 at scale — bucketed idempotent MERGE with TABLE-ATOMIC commits
@@ -181,6 +182,58 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
     (ckpt, touched.sorted)
   }
 
+  /** Read schema of each version directory, keyed by (table, version).
+    * A committed `vN/` is immutable and its number is never reused within
+    * the JVM (reservation-allocated by [[CommitProtocol]]), so a schema
+    * learned once stays right: versions this writer wrote are recorded at
+    * write time, any other (written before a restart) is inferred once.
+    * Without it every `spark.read.parquet` of a version runs a footer-
+    * reading schema-inference job — about a sixth of a per-file star
+    * micro-batch's jobs. */
+  private val versionSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
+
+  /** The schema Spark reads back from a version written from `df`: the
+    * data columns made nullable (file sources read every column as
+    * nullable), then the `_bucket` partition column as INT. */
+  private def readSchemaOf(df: DataFrame): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case o => o
+    }
+    val data = StructType(df.schema.fields.filterNot(_.name == "_bucket"))
+    nullable(data).asInstanceOf[StructType]
+      .add(StructField("_bucket", IntegerType, nullable = true))
+  }
+
+  /** The schema of version `v` as this writer remembers it, if it does. */
+  private[graft] def rememberedSchema(name: String, v: Long): Option[StructType] =
+    Option(versionSchemas.get((name, v)))
+
+  /** The ONE reader of version directories: a known schema skips
+    * inference, so resolving a table starts no Spark job. */
+  private def readVersion(name: String, v: Long): DataFrame = {
+    val schema = rememberedSchema(name, v).getOrElse {
+      val inferred = spark.read.parquet(versionDir(name, v)).schema
+      Option(versionSchemas.putIfAbsent((name, v), inferred)).getOrElse(inferred)
+    }
+    spark.read.schema(schema).parquet(versionDir(name, v))
+  }
+
+  /** Write `out` as version `v` (partitioned by `_bucket`), remember its
+    * read schema, and record its zone maps. A commit that then loses its
+    * CAS deletes `vN/` and the number is never handed out again, so the
+    * entry it leaves behind can never be read. */
+  private def writeVersionDir(name: String, v: Long, out: DataFrame): Unit = {
+    out.write.mode("overwrite").partitionBy("_bucket").parquet(versionDir(name, v))
+    versionSchemas.put((name, v), readSchemaOf(out))
+    writeStats(name, v, out)
+  }
+
   /** Read the given live (bucket → version) mappings, pruned per version
     * dir; `only` restricts to a bucket subset (partition pruning). */
   private def readPairs(name: String, all: Seq[(Int, Long)],
@@ -192,12 +245,12 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
       // predate an additive evolution, and a schema missing the newer
       // columns would let requireCompatible pass a type-conflicting batch
       all.map(_._2).distinct.sorted
-        .map(v => spark.read.parquet(versionDir(name, v)))
+        .map(readVersion(name, _))
         .reduce(_.unionByName(_, allowMissingColumns = true))
         .filter(lit(false))
     else
       relevant.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, ps) =>
-        val df = spark.read.parquet(versionDir(name, v))
+        val df = readVersion(name, v)
         val bs = ps.map(_._1)
         if (bs.size >= nBuckets) df else df.filter(col("_bucket").isin(bs: _*))
       // allowMissingColumns: version dirs written before an ADDITIVE
@@ -241,7 +294,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
     // write executes it exactly once) — aggregating the plan would run the
     // whole merge a second time. The read-back is local, pruned to the
     // stats columns, and costs one tiny job.
-    val rows = spark.read.parquet(versionDir(name, v))
+    val rows = readVersion(name, v)
       .groupBy(col("_bucket")).agg(aggs.head, aggs.tail: _*).collect()
     val lines = rows.toSeq.flatMap { r =>
       val b = r.getAs[Int]("_bucket")
@@ -285,7 +338,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
     }
     val base =
       if (keep.isEmpty)
-        spark.read.parquet(versionDir(name, pairs.head._2)).filter(lit(false))
+        readVersion(name, pairs.head._2).filter(lit(false))
       else readPairs(name, keep)
     base.drop("_bucket").filter(col(column).cast("double").between(lo, hi))
   }
@@ -397,11 +450,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
         else if (replace) prevPairs.filterNot(p => touched.contains(p._1))
         else prevPairs
       Attempt[(DataFrame, Seq[(Int, Long)])](
-        writeVersion = v => {
-          out.write.mode("overwrite").partitionBy("_bucket")
-            .parquet(versionDir(name, v))
-          writeStats(name, v, out)
-        },
+        writeVersion = writeVersionDir(name, _, out),
         swap = v => writeManifest(name, newMaxSk,
           keptPairs ++ touched.map(b => (b, v)), v),
         result = _ => (out, keptPairs))
@@ -431,11 +480,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
         val all = readPairs(name, pairs)
         val buckets = pairs.map(_._1).distinct.sorted
         Attempt[Unit](
-          writeVersion = v => {
-            all.write.mode("overwrite").partitionBy("_bucket")
-              .parquet(versionDir(name, v))
-            writeStats(name, v, all)
-          },
+          writeVersion = writeVersionDir(name, _, all),
           swap = v => writeManifest(name, maxSk, buckets.map(b => (b, v)), v),
           result = _ => ())
       }
@@ -483,6 +528,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
       val reclaimed = CommitProtocol.vacuumVersions(dir(name), live, retainMillis,
         p => now - tomb.getOrElse(p.getFileName.toString.drop(1).toLong,
           Files.getLastModifiedTime(p).toMillis)).toSet
+      reclaimed.foreach(v => versionSchemas.remove((name, v)))
       // prune tombstones of reclaimed versions — append-only growth would
       // otherwise make every vacuum re-parse the table's full commit history
       if (reclaimed.nonEmpty && tomb.nonEmpty) {

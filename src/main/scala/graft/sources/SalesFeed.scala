@@ -75,31 +75,16 @@ object SalesFeed {
     * (the reference producer sends `sorted(glob(...))`,
     * producer/csv_to_kafka.py:24); within a file, `monotonically_increasing_id`
     * preserves row order (partition ids increase with file offset), so
-    * (file_rank, mono_id) totally orders the feed.
+    * (file name, mono id) totally orders the feed.
     *
-    * `_seq` is a STRUCT(file_rank, mono) compared lexicographically by
-    * `max_by` — no bit-packed arithmetic, so there is no field-collision
-    * overflow at any partition count. The file ranking is computed on the
-    * tiny `distinct(_file)` frame (file-count rows) and broadcast-joined
-    * back: no window function ever touches the full feed, so nothing here
-    * single-partitions the data at 100 TB.
+    * `_seq` is a STRUCT(file, pos) compared lexicographically by `max_by`
+    * — no bit-packed arithmetic, so there is no field-collision overflow
+    * at any partition count. Both fields are computed in the scan itself:
+    * no second pass over the files, no job, and no window over the feed.
     */
-  def withArrivalSeq(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val withFile = df
-      .withColumn("_file", input_file_name())
-      .withColumn("_mono", monotonically_increasing_id())
-    // Rank file names on the distinct set: file count is tiny (one row per
-    // input file), so a single-partition window over it is O(files), and
-    // the rank map broadcast-joins back to the feed without a shuffle.
-    val fileRanks = withFile.select(col("_file")).distinct()
-      .withColumn("_file_rank",
-        dense_rank().over(Window.orderBy(col("_file"))).cast(LongType))
-    withFile
-      .join(broadcast(fileRanks), Seq("_file"))
-      .withColumn("_seq", struct(col("_file_rank"), col("_mono")))
-      .drop("_file", "_mono", "_file_rank")
-  }
+  def withArrivalSeq(df: DataFrame): DataFrame =
+    df.withColumn("_seq", struct(input_file_name().as("file"),
+      monotonically_increasing_id().as("pos")))
 
   /** S2 — serialize rows to Kafka-shaped JSON messages (one per row). */
   def toKafkaMessages(df: DataFrame): DataFrame =

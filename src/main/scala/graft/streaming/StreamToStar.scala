@@ -19,6 +19,16 @@ import graft.Materialize.MaterializeOps
   *
   * All state lives in the merged tables (the reference keeps it in
   * Postgres, T5); Spark-managed state is not needed for parity.
+  *
+  * Commit order within a micro-batch follows data dependency, not a fixed
+  * table sequence. Level 1 merges the six dimensions and, when the batch
+  * has malformed records, `dead_letter` — so dead letters commit alongside
+  * the dims. Level 2 merges `fact_sales` and `audit_verdicts`, both from
+  * the resolved fact rows, so a batch's verdict rows may land before its
+  * fact rows. Each table commits atomically on its own; a batch that fails
+  * part-way leaves some tables at the new state and others at the old one,
+  * and replaying the batch (what the checkpoint does after a failure)
+  * converges every table, because every merge is idempotent.
   */
 object StreamToStar {
 
@@ -34,29 +44,6 @@ object StreamToStar {
     ("dim_product",  StarSchema.productRows _,  Seq("source_product_id"),  "product_sk"),
     ("dim_store",    StarSchema.storeRows _,    Seq("store_name"),         "store_sk"),
     ("dim_supplier", StarSchema.supplierRows _, Seq("supplier_name"),      "supplier_sk"))
-
-  /** One micro-batch: T8 error split, 6 dim MERGEs, FK resolution, fact
-    * MERGE. `feed` must be the 50-column raw frame + `_seq` ordering
-    * column (T6: correctness never depends on arrival order inside the
-    * batch).
-    *
-    * Malformed/uncoercible records route to the `dead_letter` table with a
-    * reference-style "error: ..." message and a console summary
-    * (reference: flink/stream_to_star.py:284-298) — never silently nulled.
-    */
-  /** Env-gated per-batch phase timing (GRAFT_BATCH_TIMING=1): prints one
-    * stderr line per micro-batch so the fixed-cost budget is measurable
-    * instead of guessed. */
-  private val batchTiming = sys.env.contains("GRAFT_BATCH_TIMING")
-  private def timed[T](label: String, sink: StringBuilder)(body: => T): T = {
-    if (!batchTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      sink.append(f" $label=${(System.nanoTime() - t0) / 1e3}%.0fus")
-      r
-    }
-  }
 
   /** The reference's own warehouse integrity checks (`README.md:183-219`
     * — the six missing-FK counts plus fact-id uniqueness, expected all
@@ -82,6 +69,16 @@ object StreamToStar {
   val starUniqueKeys: Seq[(String, Seq[String])] =
     Seq("fact_sale_id_unique" -> Seq("source_sale_id"))
 
+  /** One micro-batch: T8 error split, then two levels of concurrent
+    * MERGEs — the 6 dims (+ dead letters), then FK resolution and the fact
+    * (+ audit verdicts). `feed` must be the 50-column raw frame + `_seq`
+    * ordering column (T6: correctness never depends on arrival order
+    * inside the batch).
+    *
+    * Malformed/uncoercible records route to the `dead_letter` table with a
+    * reference-style "error: ..." message and a console summary
+    * (reference: flink/stream_to_star.py:284-298) — never silently nulled.
+    */
   def processBatch(feed: DataFrame, store: TableStore,
                    batchId: Long = -1L,
                    auditTable: Option[String] = None): Unit = {
@@ -93,10 +90,9 @@ object StreamToStar {
     require(auditTable.isEmpty || batchId >= 0L,
       "processBatch: auditTable requires an explicit non-negative batchId " +
         "(verdicts merge on (batch_id, rule))")
-    val phases = new StringBuilder
     // Deterministic block cleanup: everything this batch localCheckpoints
     // (the feed materialization + each merge's internal frames) is dead
-    // once the fact merge lands, so free the blocks at batch end instead
+    // once the last merge lands, so free the blocks at batch end instead
     // of waiting for the ContextCleaner's GC-driven sweep — a serve-mode
     // driver between GCs would otherwise accumulate every batch's blocks.
     val sc = feed.sparkSession.sparkContext
@@ -110,14 +106,67 @@ object StreamToStar {
     // single-pipeline serve deployment).
     sweepLock.synchronized {
     val persistedBefore = sc.getPersistentRDDs.keySet
-    // set true only if every concurrent merge future provably settled —
+    // set false if some concurrent merge future never provably settled —
     // the finally sweep must NOT unpersist blocks a zombie merge still
     // reads (leaking one batch's blocks is recoverable; truncated-lineage
     // reads under a live writer are not)
     var mergesSettled = true
-    // the try opens HERE: the empty-batch return and a throw from the
-    // dead-letter merge / status print must reach the sweep too, or each
-    // retry leaks this batch's checkpointed blocks
+
+    // Run independent merges (distinct tables, shared read-only inputs)
+    // CONCURRENTLY so a level pays max(merge) instead of Σ(merge): each
+    // merge at per-file batch sizes is dominated by fixed job-submission
+    // latency, which is exactly what overlapping hides. Returns the
+    // bodies' results in order, or rethrows the first failure in order —
+    // but only once EVERY body has settled: rethrowing while a sibling is
+    // still writing would leave an orphan writer racing that table's
+    // merge when the failed batch is retried. (Futures block only in
+    // foreachBatch's driver thread; the generous Await bound exists so a
+    // wedged store surfaces as an error instead of a silent hang.)
+    def concurrently[T](bodies: Seq[() => T]): Seq[T] = {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.DurationInt
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.util.Try
+      // every body runs under one cancellable JOB GROUP (set per-thread
+      // inside the future): an Await timeout alone would leave the wedged
+      // merge running as a ZOMBIE while the finally sweep unpersists the
+      // localCheckpoint blocks it still reads, and the batch retry would
+      // race it on the same table
+      val group = s"graft-star-merges-$batchId-${System.nanoTime()}"
+      // checked at future START: cancelJobGroup only reaches jobs running
+      // at call time, so a future still QUEUED behind the wedged one would
+      // otherwise start fresh jobs after the cancel
+      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val futures = bodies.map { body =>
+        Future {
+          if (cancelled.get())
+            throw new java.util.concurrent.CancellationException(
+              "merge group cancelled after a sibling timeout")
+          sc.setJobGroup(group, s"star merges (batch $batchId)",
+            interruptOnCancel = true)
+          try body() finally sc.clearJobGroup()
+        }
+      }
+      val tries = futures.map(f => Try(Await.result(f, 10.minutes)))
+      // a TIMEOUT is not settlement — cancel the job group and re-await so
+      // the wedged merge is actually dead before the sweep/rethrow
+      if (tries.exists(_.failed.toOption
+          .exists(_.isInstanceOf[java.util.concurrent.TimeoutException]))) {
+        cancelled.set(true)          // queued futures abort at start
+        sc.cancelJobGroup(group)     // running Spark jobs die
+        // settlement must be PROVEN, not hoped: a merge wedged outside any
+        // Spark job (commit-loop I/O) survives the cancel — if any future
+        // is still unfinished after the grace re-await, keep its blocks
+        // (skip the sweep) rather than unpersist under it
+        futures.foreach(f => Try(Await.result(f, 1.minute)))
+        if (futures.exists(!_.isCompleted)) mergesSettled = false
+      }
+      tries.map(_.get)
+    }
+
+    // the try opens HERE: the empty-batch return and a throw from any
+    // merge must reach the sweep too, or each retry leaks this batch's
+    // checkpointed blocks
     try {
     // ONE eager materialization of the error-tagged feed replaces three
     // separate scans of the raw source (empty-batch probe, error-presence
@@ -126,10 +175,9 @@ object StreamToStar {
     // in-memory frame. At per-file arrival granularity those redundant
     // scans were ~0.4 s of every micro-batch.
     val obs = org.apache.spark.sql.Observation()
-    val mat = timed("materialize", phases)(
-      ErrorChannel.tagged(feed, Seq("id"))
-        .observe(obs, count(lit(1)).as("total"), count(col("_error")).as("errs"))
-        .materialized)
+    val mat = ErrorChannel.tagged(feed, Seq("id"))
+      .observe(obs, count(lit(1)).as("total"), count(col("_error")).as("errs"))
+      .materialized
     val counts = graft.plans.Observed.poll(obs)
     val total = counts.flatMap(_.get("total")).map(_.asInstanceOf[Long])
       .getOrElse(mat.count())
@@ -137,9 +185,21 @@ object StreamToStar {
     val errs = counts.flatMap(_.get("errs")).map(_.asInstanceOf[Long])
       .getOrElse(mat.filter(col("_error").isNotNull).count())
     val errors = mat.filter(col("_error").isNotNull)
-    val valid0 = mat.filter(col("_error").isNull)
+    // a slice of the in-memory `mat` — no extra cache
+    val cached = mat.filter(col("_error").isNull)
       .drop("_error", ErrorChannel.corruptCol)
-    if (errs > 0L) {
+
+    // Level 1: everything that reads only the split feed.
+    val dimMerges = dimSpecs.map { case (name, rows, natKey, sk) => () =>
+      store.mergeDim(name, StarSchema.lastWriteWins(rows(cached), natKey, "_seq"),
+        natKey, sk)
+    } :+ { () =>
+      // dim_date is keyed by the value itself; attributes are derived, so
+      // last-write-wins degenerates to distinct
+      store.mergeDim("dim_date", StarSchema.dateRows(cached),
+        Seq("sale_date"), "date_sk")
+    }
+    val deadLetters = if (errs == 0L) Nil else Seq { () =>
       // console status from the already-known counts + an error sample —
       // the reference's per-record status line, scale-safely
       ErrorChannel.printStatus(total - errs, errs, errors, sample = 20)
@@ -155,104 +215,38 @@ object StreamToStar {
       // console status still reports per-occurrence counts).
       val record = to_json(struct(
         feed.columns.filterNot(_ == "_seq").toIndexedSeq.map(col): _*))
-      timed("deadLetter", phases)(store.mergeFact("dead_letter",
+      store.mergeFact("dead_letter",
         errors.select(
           md5(concat_ws("|", col("_error"), record)).as("_dl_key"),
           col("_error"), record.as("record")),
-        Seq("_dl_key")))
+        Seq("_dl_key"))
     }
-    val cached = valid0 // a slice of the in-memory `mat` — no extra cache
-      // The 6 dimension merges are independent (distinct tables, shared
-      // read-only input) — submit them CONCURRENTLY so the micro-batch
-      // pays max(dim merge) instead of Σ(dim merge). Spark's scheduler
-      // interleaves the jobs across the executor pool; each merge is
-      // dominated by fixed job-submission latency at small batches, which
-      // is exactly what overlapping hides. (Futures block only in
-      // foreachBatch's driver thread; the generous Await bound exists so
-      // a wedged store surfaces as an error instead of a silent hang.)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.DurationInt
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // every merge future runs under one cancellable JOB GROUP (set
-      // per-thread inside the future): an Await timeout alone would leave
-      // the wedged merge running as a ZOMBIE while the finally sweep
-      // unpersists the localCheckpoint blocks it still reads, and the
-      // batch retry would race it on the same table
-      val mergeGroup = s"graft-star-merges-$batchId-${System.nanoTime()}"
-      // checked at future START: cancelJobGroup only reaches jobs running
-      // at call time, so a future still QUEUED behind the wedged one would
-      // otherwise start fresh jobs after the cancel
-      val mergesCancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def grouped[T](body: => T): T = {
-        if (mergesCancelled.get())
-          throw new java.util.concurrent.CancellationException(
-            "merge group cancelled after a sibling timeout")
-        sc.setJobGroup(mergeGroup, s"star dim merges (batch $batchId)",
-          interruptOnCancel = true)
-        try body finally sc.clearJobGroup()
-      }
-      val dimFutures = dimSpecs.map { case (name, rows, natKey, sk) =>
-        name -> Future {
-          grouped {
-            val collapsed = StarSchema.lastWriteWins(rows(cached), natKey, "_seq")
-            store.mergeDim(name, collapsed, natKey, sk)
-          }
-        }
-      }
-      // dim_date is keyed by the value itself; attributes are derived, so
-      // last-write-wins degenerates to distinct
-      val dateFuture = Future {
-        grouped(store.mergeDim("dim_date", StarSchema.dateRows(cached),
-          Seq("sale_date"), "date_sk"))
-      }
-      // settle EVERY future before surfacing a failure: rethrowing while a
-      // sibling merge is still writing would leave an orphan writer racing
-      // this table's merge when the failed batch is retried. A TIMEOUT is
-      // not settlement — cancel the job group and re-await so the wedged
-      // merge is actually dead before the sweep/rethrow.
-      val settled = timed("dims", phases) {
-        val all = dimFutures.map(_._2) :+ dateFuture
-        val tries = all.map(f => scala.util.Try(Await.result(f, 10.minutes)))
-        if (tries.exists {
-          case scala.util.Failure(_: java.util.concurrent.TimeoutException) => true
-          case _ => false
-        }) {
-          mergesCancelled.set(true)          // queued futures abort at start
-          sc.cancelJobGroup(mergeGroup)      // running Spark jobs die
-          // settlement must be PROVEN, not hoped: a merge wedged outside
-          // any Spark job (commit-loop I/O) survives the cancel — if any
-          // future is still unfinished after the grace re-await, keep its
-          // blocks (skip the sweep) rather than unpersist under it
-          all.foreach(f => scala.util.Try(Await.result(f, 1.minute)))
-          if (all.exists(!_.isCompleted)) mergesSettled = false
-        }
-        tries
-      }
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
-      val dims = dimFutures.map(_._1).zip(settled.init.map(_.get)).toMap
-      val dimDate = settled.last.get
+    val level1 = concurrently(dimMerges ++ deadLetters)
+    val dims = dimSpecs.map(_._1).zip(level1).toMap
+    val dimDate = level1(dimSpecs.size)
 
-      val fact = StarSchema.lastWriteWins(
-        StarSchema.factRows(cached), Seq("source_sale_id"), "_seq")
-      val resolved0 = StarSchema.resolveFactKeys(
-        fact,
-        dims("dim_customer"), dims("dim_seller"), dims("dim_product"),
-        dims("dim_store"), dims("dim_supplier"), dimDate)
-      // with the audit on, the resolved frame is read twice (merge +
-      // verdict aggregates) — materialize once; swept at batch end
-      val resolved =
-        if (auditTable.isDefined) resolved0.materialized else resolved0
-      timed("fact", phases)(store.mergeFact("fact_sales", resolved, Seq("source_sale_id")))
-      auditTable.foreach { tbl =>
-        val verdicts = Expectations
-          .audit(resolved, starExpectations, starUniqueKeys)
-          .withColumn("batch_id", lit(batchId))
-        // keyed on (batch_id, rule): a replayed micro-batch overwrites
-        // its own verdict rows — the star tables' effectively-once shape
-        timed("audit", phases)(
-          store.mergeFact(tbl, verdicts, Seq("batch_id", "rule")))
-      }
-      ()
+    // Level 2: everything that reads the resolved fact rows.
+    val fact = StarSchema.lastWriteWins(
+      StarSchema.factRows(cached), Seq("source_sale_id"), "_seq")
+    val resolved0 = StarSchema.resolveFactKeys(
+      fact,
+      dims("dim_customer"), dims("dim_seller"), dims("dim_product"),
+      dims("dim_store"), dims("dim_supplier"), dimDate)
+    // with the audit on, the resolved frame is read twice (merge +
+    // verdict aggregates) — materialize once; swept at batch end
+    val resolved =
+      if (auditTable.isDefined) resolved0.materialized else resolved0
+    val audit = auditTable.toSeq.map { tbl => () =>
+      val verdicts = Expectations
+        .audit(resolved, starExpectations, starUniqueKeys)
+        .withColumn("batch_id", lit(batchId))
+      // keyed on (batch_id, rule): a replayed micro-batch overwrites
+      // its own verdict rows — the star tables' effectively-once shape
+      store.mergeFact(tbl, verdicts, Seq("batch_id", "rule"))
+    }
+    concurrently(
+      (() => store.mergeFact("fact_sales", resolved, Seq("source_sale_id"))) +: audit)
+    ()
     } finally {
       if (mergesSettled) {
         val persisted = sc.getPersistentRDDs
@@ -262,7 +256,6 @@ object StreamToStar {
         "[graft-batch] WARN: a merge future never settled after cancellation " +
           "— skipping this batch's block sweep (blocks leak; the " +
           "ContextCleaner reclaims them on GC once the zombie dies)")
-      if (batchTiming) System.err.println(s"[graft-batch]$phases")
     }
     }
   }
