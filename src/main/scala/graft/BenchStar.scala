@@ -2,7 +2,7 @@ package graft
 
 import java.io.PrintWriter
 import java.nio.file.Files
-import graft.plans.{BucketedMergeWriter, MergeWriter}
+import graft.plans.BucketedMergeWriter
 import graft.streaming.StreamToStar
 
 /** Star-pipeline throughput benchmark on the reference's own workload
@@ -18,18 +18,17 @@ import graft.streaming.StreamToStar
   * dominated by fixed per-batch planning cost and scales to millions of
   * rows per batch unchanged.
   *
-  * Usage: runMain graft.BenchStar [store] [nFiles] [rowsPerFile] [filesPerTrigger] [audit]
+  * Usage: runMain graft.BenchStar [nFiles] [rowsPerFile] [filesPerTrigger] [audit]
   * Prints one JSON line {"records":N,"sec":s,"records_per_sec":r,...}.
   * [audit] = on|off (default on — the full pipeline including the
   * per-batch expectation verdicts; off isolates the audit's fixed cost).
   */
 object BenchStar {
   def main(args: Array[String]): Unit = {
-    val storeKind = if (args.nonEmpty) args(0) else "bucketed"
-    val nFiles = if (args.length > 1) args(1).toInt else 10
-    val rows = if (args.length > 2) args(2).toInt else 1000
-    val perTrigger = if (args.length > 3) args(3).toInt else 1
-    val audit = args.length <= 4 || args(4) != "off"
+    val nFiles = if (args.nonEmpty) args(0).toInt else 10
+    val rows = if (args.length > 1) args(1).toInt else 1000
+    val perTrigger = if (args.length > 2) args(2).toInt else 1
+    val audit = args.length <= 3 || args(3) != "off"
     val spark = GraftSession.local("graft-bench-star")
 
     val feedDir = Files.createTempDirectory("graft-bench-feed").toString
@@ -55,9 +54,7 @@ object BenchStar {
     }
 
     val root = Files.createTempDirectory("graft-bench-tables").toString
-    val store: graft.plans.TableStore =
-      if (storeKind == "versioned") new MergeWriter(spark, root)
-      else new BucketedMergeWriter(spark, root)
+    val store = new BucketedMergeWriter(spark, root)
     val ckpt = Files.createTempDirectory("graft-bench-ckpt").toString
 
     val t0 = System.nanoTime()
@@ -68,7 +65,7 @@ object BenchStar {
     val n = nFiles.toLong * rows
     val fact = store.read("fact_sales").count()
     require(fact == rows, s"fact must collapse to $rows rows, got $fact")
-    println(f"""{"records":$n,"sec":$sec%.2f,"records_per_sec":${(n / sec).toLong},"store":"$storeKind","files":$nFiles,"files_per_trigger":$perTrigger,"fact_rows":$fact,"audit":$audit}""")
+    println(f"""{"records":$n,"sec":$sec%.2f,"records_per_sec":${(n / sec).toLong},"files":$nFiles,"files_per_trigger":$perTrigger,"fact_rows":$fact,"audit":$audit}""")
     spark.stop()
   }
 }

@@ -39,17 +39,17 @@ import org.apache.spark.storage.StorageLevel
   *     `spark.catalog.clearCache()` between pipelines): a mode for
   *     bounded batch pipelines, not resident services. A THIRD caveat
   *     (the r15 review): the recompute-on-block-loss guarantee does
-  *     NOT hold across the versioned writers' vacuum. Inside
-  *     [[graft.plans.MergeWriter]]/[[graft.plans.BucketedMergeWriter]]
-  *     commit paths, kept lineage bottoms out in parquet scans of the
-  *     store version that was CURRENT at materialization time; once
-  *     `vacuum` deletes superseded versions, recomputing a lost block
-  *     reads deleted files and fails — and even before vacuum, a
+  *     NOT hold across the table store's vacuum. Inside
+  *     [[graft.plans.BucketedMergeWriter]] commit paths, kept lineage
+  *     bottoms out in parquet scans of the store version that was
+  *     CURRENT at materialization time; once `vacuum` deletes
+  *     superseded versions, recomputing a lost block reads deleted
+  *     files and fails — and even before vacuum, a
   *     concurrent commit can make the recompute read a DIFFERENT
   *     version than the one the block was cut from. Under `persist`,
   *     treat any executor loss that lands mid-merge as a job failure
-  *     to rerun (the writers' CAS manifests make reruns safe); for
-  *     genuine in-flight fault tolerance over versioned stores, use
+  *     to rerun (the store's CAS manifest makes reruns safe); for
+  *     genuine in-flight fault tolerance over the table store, use
   *     `reliable`, whose lineage cut snapshots the bytes.
   *
   * All three produce IDENTICAL results (MaterializeSpec proves it on the

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.plans.{Integrity, MergeWriter}
+import graft.plans.{BucketedMergeWriter, Integrity}
 import graft.streaming.StreamToStar
 
 /** E2E entry point: replay a CSV sales feed into the star schema, then run
@@ -10,10 +10,8 @@ import graft.streaming.StreamToStar
   * reference's `main()` + manual psql checks in one shot
   * (reference: flink/stream_to_star.py:301-322 + README.md:183-219).
   *
-  * Usage: runMain graft.RunStar <csvGlob> <tableRoot> [checkpointDir] [store]
-  *   store = "bucketed" (default: hash-bucketed, O(touched-buckets) writes,
-  *           atomic manifest commits — the scale-correct store) or
-  *           "versioned" (whole-table versions; simplest, time-travelable)
+  * Usage: runMain graft.RunStar <csvGlob> <tableRoot> [checkpointDir]
+  * Tables land in a [[BucketedMergeWriter]] rooted at `tableRoot`.
   */
 object RunStar {
   val starTables: Seq[String] = Seq(
@@ -25,18 +23,13 @@ object RunStar {
     val root = args(1)
     val checkpoint = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val storeKind = if (args.length > 3) args(3) else "bucketed"
     val spark = GraftSession.local("graft-run-star")
-    run(spark, glob, root, checkpoint, storeKind)
+    run(spark, glob, root, checkpoint)
     spark.stop()
   }
 
-  def run(spark: SparkSession, glob: String, root: String, checkpoint: String,
-          storeKind: String = "bucketed"): Unit = {
-    val store: graft.plans.TableStore = storeKind match {
-      case "versioned" => new MergeWriter(spark, root)
-      case _ => new graft.plans.BucketedMergeWriter(spark, root)
-    }
+  def run(spark: SparkSession, glob: String, root: String, checkpoint: String): Unit = {
+    val store = new BucketedMergeWriter(spark, root)
     val query = StreamToStar.startFromFiles(spark, glob, store, checkpoint)
     query.awaitTermination()
 

@@ -53,8 +53,7 @@ class IncrementalDedupIndex(val store: TableStore, table: String,
   def ingest(batch: DataFrame, idCol: String = "doc_id",
              textCol: String = "text"): DataFrame = {
     // empty-batch fast path: a zero-row trigger (offset-only Kafka
-    // batches) must not run the 8-job pipeline and — with a MergeWriter
-    // store — full-rewrite both index tables for nothing
+    // batches) must not run the 8-job pipeline for nothing
     if (batch.isEmpty)
       return batch.select(col(idCol).as("doc_a"), col(idCol).as("doc_b"),
         lit(0.0).as("est_jaccard")).limit(0)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * (reference: postgres/00_ddl_dw.sql:1-70) and prefixes unqualified table
   * names with the schema (reference: flink/stream_to_star.py:96-97,
   * `_ensure_schema_prefix`). Spark equivalent: a `dw` database in the
-  * session catalog with external parquet tables over the MergeWriter
+  * session catalog with external parquet tables over the table store's
   * output, so the star is queryable via plain `spark.sql("... dw.fact_sales
   * ...")`. Types mirror the reference DDL (BIGINT keys, STRING attributes,
   * INT parts, DECIMAL money/rating, DATE).
@@ -56,8 +56,8 @@ object Ddl {
     }
   }
 
-  /** Point the catalog tables at a MergeWriter table root's CURRENT
-    * versions: registers temp-view aliases resolving the pointer files (a
+  /** Point the catalog tables at a table store's live versions:
+    * registers temp-view aliases resolving each table's manifest (a
     * catalog view per star table, so `spark.sql` queries read the latest
     * merged state). */
   def registerCurrent(spark: SparkSession, store: TableStore,

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.col
   *     executors stream their partitions through `addBatch/executeBatch`
   *     instead of the reference's 7 synchronous round-trips per record;
   *   - the star tables keep living in the engine's own store
-  *     ([[MergeWriter]]/[[BucketedMergeWriter]]); the JDBC sink is a
+  *     ([[BucketedMergeWriter]]); the JDBC sink is a
   *     MIRROR for downstream consumers that want the warehouse in
   *     Postgres, fed from the already-merged tables (so the upsert is
   *     idempotent by construction — replaying a mirror push converges).

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Distributed dense surrogate-key assignment shared by the two stores:
+/** Distributed dense surrogate-key assignment for the table store:
   * sk = offset + 1-based global index over the frame.
   *
   * Same shape as RDD `zipWithIndex` (one job to learn partition sizes,

@@ -3,17 +3,15 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 
 /** Storage contract for the star tables: idempotent MERGE semantics with
-  * stable surrogate keys. Two implementations:
+  * stable surrogate keys. The one implementation is
+  * [[BucketedMergeWriter]]: natural-key hash buckets as parquet
+  * partitions, a merge rewrites ONLY touched buckets, and commits are
+  * compare-and-swap manifest swaps. On a production cluster the same
+  * interface maps directly onto Delta/Iceberg `MERGE INTO`.
   *
-  *   - [[MergeWriter]]: versioned whole-table parquet + atomic pointer
-  *     flip. Simple, atomic, time-travelable — but write amplification is
-  *     O(table) per batch.
-  *   - [[BucketedMergeWriter]]: natural-key hash buckets as parquet
-  *     partitions; a merge rewrites ONLY touched buckets (dynamic
-  *     partition overwrite + partition pruning on read), so per-batch
-  *     write cost is O(touched buckets) ≈ O(batch × table/buckets) — the
-  *     100 TB-viable shape. On a production cluster the same interface
-  *     maps directly onto Delta/Iceberg `MERGE INTO`.
+  * The trait exists so the streaming monitors type against the contract
+  * rather than the store, and so tests can substitute fakes (e.g. a
+  * decorator that fails one table's merge).
   */
 trait TableStore {
   def exists(name: String): Boolean
@@ -25,11 +23,10 @@ trait TableStore {
   /** Atomically replace the table's ENTIRE contents with `batch` (same
     * pointer-commit atomicity as a merge). Merges cannot delete rows by
     * omission, so whole-table rewrites (aggregate-slice compaction,
-    * dimension rebuilds) need this. `natKey` drives storage layout
-    * (bucketing) where the implementation has one.
+    * dimension rebuilds) need this. `natKey` drives the bucketing.
     *
-    * Contract (both stores): `batch` must be NON-EMPTY — an empty replace
-    * is rejected, not treated as truncation (drop the table directory to
+    * Contract: `batch` must be NON-EMPTY — an empty replace is
+    * rejected, not treated as truncation (drop the table directory to
     * truncate). The swap is atomic, but the replacement contents are the
     * CALLER's snapshot: serialize replaceTable against concurrent writers
     * of the same table whose commits must not be superseded. */

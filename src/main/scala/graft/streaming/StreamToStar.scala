@@ -15,7 +15,8 @@ import graft.Materialize.MaterializeOps
   * reads made effectively-once by sink idempotency (reference:
   * flink/stream_to_star.py:305-315 + the ON CONFLICT upserts). Spark
   * mapping: checkpointed Structured Streaming micro-batches + the
-  * idempotent MergeWriter — a replayed batch merges to the same state.
+  * idempotent [[graft.plans.TableStore]] merges — a replayed batch
+  * merges to the same state.
   *
   * All state lives in the merged tables (the reference keeps it in
   * Postgres, T5); Spark-managed state is not needed for parity.

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.plans.{AggMaintenance, BucketedMergeWriter, MergeWriter, TableStore}
+import graft.plans.{AggMaintenance, BucketedMergeWriter, TableStore}
 
 /** Idempotent incremental aggregate maintenance: per-(key, batch) partial
   * slices make replays exactly-once (a replayed batch overwrites its own
@@ -69,11 +69,6 @@ class AggMaintenanceSpec extends SparkSpec {
   test("additive rollup maintenance is replay-idempotent and compactable [bucketed]") {
     exercise(new BucketedMergeWriter(spark,
       Files.createTempDirectory("graft-agg-b").toString, nBuckets = 4))
-  }
-
-  test("additive rollup maintenance is replay-idempotent and compactable [versioned]") {
-    exercise(new MergeWriter(spark,
-      Files.createTempDirectory("graft-agg-v").toString))
   }
 
   test("replaceTable drops rows absent from the replacement (delete by omission)") {

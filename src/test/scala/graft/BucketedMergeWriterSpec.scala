@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.plans.BucketedMergeWriter
 
-/** Bucketed MERGE invariants: same semantics as MergeWriter, plus the
+/** Bucketed MERGE invariants beyond MergeWriterSpec's store contract: the
   * load-bearing scale property — a merge must leave untouched buckets'
   * files physically unchanged on disk (write amplification O(touched
   * buckets), not O(table)). */
@@ -119,8 +119,8 @@ class BucketedMergeWriterSpec extends SparkSpec {
     assert(t.count() === 1)
   }
 
-  test("end-to-end star pipeline over the bucketed store matches MergeWriter results") {
-    import graft.plans.MergeWriter
+  test("end-to-end star pipeline over the bucketed store lands the feed's exact counts") {
+    import graft.plans.Integrity
     import graft.streaming.StreamToStar
     val feedDir = Files.createTempDirectory("graft-feed-b").toString
     // small 2-file feed with duplicate ids
@@ -139,15 +139,24 @@ class BucketedMergeWriterSpec extends SparkSpec {
       }
       pw.close()
     }
-    def runWith(store: graft.plans.TableStore): Map[String, Long] = {
-      StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
-        Files.createTempDirectory("ckpt").toString).awaitTermination()
-      RunStar.starTables.map(t => t -> store.read(t).count()).toMap
-    }
-    val a = runWith(new MergeWriter(spark, Files.createTempDirectory("ta").toString))
-    val b = runWith(new BucketedMergeWriter(spark, Files.createTempDirectory("tb").toString, 8))
-    assert(a === b)
-    assert(a("fact_sales") === 50)
+    val store = new BucketedMergeWriter(spark, freshRoot(), 8)
+    StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
+      Files.createTempDirectory("ckpt").toString).awaitTermination()
+    // ids 1..50 in both files collapse to 50 entities each; 5 store and
+    // 3 supplier names; one sale date
+    val counts = RunStar.starTables.map(t => t -> store.read(t).count()).toMap
+    assert(counts === Map(
+      "dim_customer" -> 50L, "dim_seller" -> 50L, "dim_product" -> 50L,
+      "dim_store" -> 5L, "dim_supplier" -> 3L, "dim_date" -> 1L,
+      "fact_sales" -> 50L))
+    val audit = Integrity.audit(store.read("fact_sales"), Seq(
+      ("customer", store.read("dim_customer"), "customer_key", "customer_sk"),
+      ("seller", store.read("dim_seller"), "seller_key", "seller_sk"),
+      ("product", store.read("dim_product"), "product_key", "product_sk"),
+      ("store", store.read("dim_store"), "store_key", "store_sk"),
+      ("supplier", store.read("dim_supplier"), "supplier_key", "supplier_sk"),
+      ("date", store.read("dim_date"), "date_key", "date_sk")))
+    assert(audit.values.forall(_ == 0L), s"orphan foreign keys: $audit")
   }
 
   test("reopening a table with a different nBuckets fails loudly (identity guard)") {

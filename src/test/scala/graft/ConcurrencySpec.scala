@@ -5,7 +5,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.DurationInt
 import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.functions._
-import graft.plans.{BucketedMergeWriter, MergeWriter}
+import graft.plans.BucketedMergeWriter
 
 /** Optimistic-concurrency invariants of the bucketed store (VERDICT r3
   * "next #2"): the manifest commit is compare-and-swap, so concurrent
@@ -73,63 +73,6 @@ class ConcurrencySpec extends SparkSpec {
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("rnd")).toMap
     assert(rows.keySet === ((0L until 5L) ++ (50L until 55L)).toSet)
     assert(rows.values.forall(_ == 6L), s"a merge's last round was lost: $rows")
-  }
-
-  test("simple store: two concurrent mergeDims on one table never lose an update") {
-    // same CAS commit path (CommitProtocol) as the bucketed store — the
-    // blind pointer bump this store used to have both lost updates and
-    // collided version numbers under exactly this race
-    val store = new MergeWriter(spark, freshRoot())
-    def writer(lo: Long, rounds: Int): Future[Unit] = Future {
-      for (r <- 1 to rounds)
-        store.mergeDim("d",
-          (lo until lo + 10L).map(k => (k, s"attr_${k}_r$r")).toDF("k", "attr"),
-          Seq("k"), "sk")
-    }
-    Await.result(
-      Future.sequence(Seq(writer(0L, 5), writer(100L, 5))), 5.minutes)
-    val rows = store.read("d").collect()
-      .map(r => r.getAs[Long]("k") -> (r.getAs[Long]("sk"), r.getAs[String]("attr")))
-      .toMap
-    assert(rows.keySet === ((0L until 10L) ++ (100L until 110L)).toSet)
-    for (k <- rows.keySet)
-      assert(rows(k)._2 === s"attr_${k}_r5", s"key $k lost its last update: ${rows(k)}")
-    val sks = rows.values.map(_._1).toSeq
-    assert(sks.distinct.size === sks.size, s"duplicate sks: $sks")
-  }
-
-  test("simple store: concurrent writers inserting the SAME new keys assign one sk per key") {
-    val store = new MergeWriter(spark, freshRoot())
-    val fs = (0 until 3).map { w =>
-      Future {
-        store.mergeDim("d", (1L to 20L).map(k => (k, s"w$w")).toDF("k", "attr"),
-          Seq("k"), "sk")
-      }
-    }
-    Await.result(Future.sequence(fs), 5.minutes)
-    val t = store.read("d").collect()
-      .map(r => r.getAs[Long]("k") -> r.getAs[Long]("sk")).toMap
-    assert(t.keySet === (1L to 20L).toSet)
-    assert(t.values.toSeq.distinct.size === 20, "sk collision across racing writers")
-  }
-
-  test("simple store: vacuum reclaims superseded versions, keeps the current one") {
-    val root = freshRoot()
-    val store = new MergeWriter(spark, root)
-    store.mergeFact("f", Seq((1L, 1L)).toDF("id", "rnd"), Seq("id"))
-    store.mergeFact("f", Seq((1L, 2L)).toDF("id", "rnd"), Seq("id"))
-    store.vacuum("f")
-    val versions = Files.list(java.nio.file.Paths.get(s"$root/f")).iterator()
-    val names = scala.jdk.CollectionConverters.IteratorHasAsScala(versions).asScala
-      .map(_.getFileName.toString).filter(_.matches("v\\d+")).toList
-    assert(names.size === 1, s"expected exactly the live version, got $names")
-    val after = store.read("f").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(after === Seq((1L, 2L)))
-  }
-
-  test("simple store: vacuum of a never-written table is a no-op, not a crash") {
-    val store = new MergeWriter(spark, freshRoot())
-    store.vacuum("never_created") // must not throw
   }
 
   test("vacuum racing merges reaps only dead versions, never in-flight ones") {

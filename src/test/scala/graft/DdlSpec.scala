@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.plans.{Ddl, MergeWriter}
+import graft.plans.{BucketedMergeWriter, Ddl}
 
 /** S6/P11: idempotent bootstrap, schema-prefix resolution, SQL access to
   * merged star tables. */
@@ -24,7 +24,8 @@ class DdlSpec extends SparkSpec {
   }
 
   test("registerCurrent exposes merged tables to spark.sql") {
-    val store = new MergeWriter(spark, Files.createTempDirectory("graft-reg").toString)
+    val store = new BucketedMergeWriter(spark,
+      Files.createTempDirectory("graft-reg").toString, nBuckets = 4)
     store.mergeDim("dim_demo", Seq((1L, "a")).toDF("k", "attr"), Seq("k"), "sk")
     Ddl.registerCurrent(spark, store, Seq("dim_demo", "missing_table"))
     assert(spark.sql("SELECT attr FROM dim_demo WHERE k = 1").collect()

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.plans.MergeWriter
+import graft.plans.BucketedMergeWriter
 import graft.sources.SalesFeed
 import graft.streaming.StreamToStar
 
@@ -44,7 +44,8 @@ class KafkaIntegrationSpec extends SparkSpec {
       .drop("_seq", graft.streaming.ErrorChannel.corruptCol)
     SalesFeed.writeToKafka(feed, bs, topic)
 
-    val store = new MergeWriter(spark, Files.createTempDirectory("graft-kafka").toString)
+    val store = new BucketedMergeWriter(spark,
+      Files.createTempDirectory("graft-kafka").toString, nBuckets = 4)
     val q = StreamToStar.startFromKafka(spark, bs, topic, store,
       Files.createTempDirectory("graft-kafka-ckpt").toString)
     q.awaitTermination(60000)
@@ -58,7 +59,8 @@ class KafkaIntegrationSpec extends SparkSpec {
       .drop("_seq", graft.streaming.ErrorChannel.corruptCol)
     SalesFeed.toKafkaMessages(feed).write.mode("overwrite").text(msgsDir)
 
-    val store = new MergeWriter(spark, Files.createTempDirectory("graft-json-star").toString)
+    val store = new BucketedMergeWriter(spark,
+      Files.createTempDirectory("graft-json-star").toString, nBuckets = 4)
     StreamToStar.startFromJsonFiles(spark, s"$msgsDir/part-*", store,
       Files.createTempDirectory("graft-json-ckpt").toString).awaitTermination()
 

@@ -2,15 +2,17 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.plans.MergeWriter
+import graft.plans.BucketedMergeWriter
 
-/** MERGE-layer invariants (SURVEY.md §7.4.2): surrogate-key stability,
-  * last-write-wins upsert, empty-table guards, append table. */
+/** MERGE-layer invariants of the table store (SURVEY.md §7.4.2):
+  * surrogate-key stability, last-write-wins upsert, empty-table guards,
+  * append table. Bucket-level properties live in BucketedMergeWriterSpec. */
 class MergeWriterSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore() =
-    new MergeWriter(spark, Files.createTempDirectory("graft-merge").toString)
+    new BucketedMergeWriter(spark, Files.createTempDirectory("graft-merge").toString,
+      nBuckets = 4)
 
   test("mergeDim assigns dense keys on first batch and never reassigns them") {
     val store = freshStore()
@@ -56,20 +58,16 @@ class MergeWriterSpec extends SparkSpec {
   }
 
   test("empty batches over an existing table are a no-op (no version churn)") {
-    val root = Files.createTempDirectory("graft-merge-empty").toString
-    val store = new MergeWriter(spark, root)
+    val store = freshStore()
     val b1 = Seq((10L, "a")).toDF("k", "attr")
     store.mergeDim("d", b1, Seq("k"), "sk")
     store.mergeFact("f", Seq((1L, 2.0)).toDF("k", "v"), Seq("k"))
-    def dirs(t: String) = {
-      val s = Files.list(java.nio.file.Paths.get(root, t))
-      try s.count() finally s.close()
-    }
-    val (dimDirs, factDirs) = (dirs("d"), dirs("f"))
+    def versions(t: String) = (store.onDiskVersionDirs(t), store.committedVersions(t))
+    val (dimBefore, factBefore) = (versions("d"), versions("f"))
     store.mergeDim("d", b1.limit(0), Seq("k"), "sk")
     store.mergeFact("f", Seq.empty[(Long, Double)].toDF("k", "v"), Seq("k"))
-    assert(dirs("d") === dimDirs, "empty dim merge must not write a version")
-    assert(dirs("f") === factDirs, "empty fact merge must not write a version")
+    assert(versions("d") === dimBefore, "empty dim merge must not write a version")
+    assert(versions("f") === factBefore, "empty fact merge must not write a version")
     assert(store.read("d").count() === 1 && store.read("f").count() === 1)
   }
 

@@ -3,7 +3,7 @@ package graft
 import java.io.PrintWriter
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.plans.{Integrity, MergeWriter}
+import graft.plans.{BucketedMergeWriter, Integrity}
 import graft.sources.SalesFeed
 import graft.streaming.StreamToStar
 
@@ -62,18 +62,12 @@ class StarPipelineSpec extends SparkSpec {
   private def counts(store: graft.plans.TableStore): Map[String, Long] =
     RunStar.starTables.map(t => t -> store.read(t).count()).toMap
 
-  // the full e2e contract must hold for BOTH stores (VERDICT r2 #2): the
-  // bucketed store is the default scale path, the versioned store the
-  // simple/atomic one — identical semantics required
-  for ((label, mkStore) <- Seq[(String, String => graft.plans.TableStore)](
-      "versioned" -> (root => new MergeWriter(spark, root)),
-      "bucketed" -> (root => new graft.plans.BucketedMergeWriter(spark, root, nBuckets = 8))))
-  test(s"e2e replay reproduces the reference's published counts, uniqueness and audit [$label]") {
+  test("e2e replay reproduces the reference's published counts, uniqueness and audit [bucketed]") {
     val feedDir = Files.createTempDirectory("graft-feed").toString
     val tableDir = Files.createTempDirectory("graft-tables").toString
     writeFeed(feedDir)
 
-    val store = mkStore(tableDir)
+    val store = new BucketedMergeWriter(spark, tableDir, nBuckets = 8)
     StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
       Files.createTempDirectory("graft-ckpt").toString).awaitTermination()
 
@@ -125,7 +119,7 @@ class StarPipelineSpec extends SparkSpec {
     val feedDir = Files.createTempDirectory("graft-feed-av").toString
     val tableDir = Files.createTempDirectory("graft-tables-av").toString
     writeFeed(feedDir, nFiles = 3, nRows = 200)
-    val store = new graft.plans.BucketedMergeWriter(spark, tableDir, nBuckets = 4)
+    val store = new BucketedMergeWriter(spark, tableDir, nBuckets = 4)
     StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
       Files.createTempDirectory("graft-ckpt-av").toString).awaitTermination()
     val v = store.read("audit_verdicts")
@@ -173,7 +167,7 @@ class StarPipelineSpec extends SparkSpec {
       "NULL seller ids must surface as a failing per-batch verdict")
   }
 
-  test("dead-letter writes are idempotent across checkpoint replays (both stores)") {
+  test("dead-letter writes are idempotent across checkpoint replays") {
     val feedDir = Files.createTempDirectory("graft-feed-dl").toString
     val pw = new PrintWriter(s"$feedDir/MOCK_DATA_0.csv")
     pw.println(SalesFeed.fieldNames.mkString(","))
@@ -186,22 +180,19 @@ class StarPipelineSpec extends SparkSpec {
       pw.println(SalesFeed.fieldNames.map(c => m.getOrElse(c, "")).mkString(","))
     }
     pw.close()
-    for (mk <- Seq[(String => graft.plans.TableStore)](
-        root => new MergeWriter(spark, root),
-        root => new graft.plans.BucketedMergeWriter(spark, root, nBuckets = 4))) {
-      val store = mk(Files.createTempDirectory("graft-dl-tables").toString)
-      StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
-        Files.createTempDirectory("dl-ckpt1").toString).awaitTermination()
-      val n1 = store.read("dead_letter").count()
-      assert(n1 === 8, "every uncoercible id must dead-letter exactly once")
-      // replay with a FRESH checkpoint — the same batch runs again; the
-      // keyed merge must not duplicate dead-letter rows
-      StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
-        Files.createTempDirectory("dl-ckpt2").toString).awaitTermination()
-      assert(store.read("dead_letter").count() === n1,
-        "replayed batch must not append duplicate dead-letter records")
-      assert(store.read("fact_sales").count() === 32)
-    }
+    val store = new BucketedMergeWriter(spark,
+      Files.createTempDirectory("graft-dl-tables").toString, nBuckets = 4)
+    StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
+      Files.createTempDirectory("dl-ckpt1").toString).awaitTermination()
+    val n1 = store.read("dead_letter").count()
+    assert(n1 === 8, "every uncoercible id must dead-letter exactly once")
+    // replay with a FRESH checkpoint — the same batch runs again; the
+    // keyed merge must not duplicate dead-letter rows
+    StreamToStar.startFromFiles(spark, s"$feedDir/MOCK_DATA_*.csv", store,
+      Files.createTempDirectory("dl-ckpt2").toString).awaitTermination()
+    assert(store.read("dead_letter").count() === n1,
+      "replayed batch must not append duplicate dead-letter records")
+    assert(store.read("fact_sales").count() === 32)
   }
 
   test("lastWriteWins is deterministic under shuffled partitioning (T6)") {
