@@ -12,6 +12,27 @@ import org.apache.spark.sql.SparkSession
   *     where AQE re-derives it),
   *   - UTC session time zone so date semantics match the DuckDB oracle and
   *     are cluster-node independent.
+  *
+  * Two settings size the local runtime to graft's working set; both remove
+  * a cost that every star micro-batch paid again:
+  *   - `spark.sql.codegen.cache.maxEntries` = 1000. Spark keeps 100
+  *     generated classes by default, fewer than one star micro-batch or
+  *     one pass over the 22 TPC-H shapes uses, so each recompiled most of
+  *     its classes with Janino: 262–264 compiles in a steady-state
+  *     1000-row batch (SessionRuntimeSpec) and 277–278 per TPC-H pass at
+  *     100 entries; 6 and 12–22 at 1000.
+  *   - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` = [[LocalFs]]
+  *     and its `FileContext` twin: without libhadoop, Hadoop's local file
+  *     system forks `chmod` for every file and directory it creates and
+  *     `readlink` in every checkpoint rename (SessionRuntimeSpec: 327
+  *     forks in a steady-state batch, 369 in a checkpointed one; 0 with
+  *     [[LocalFs]]). Left unset, `file:` resolves to whichever jar
+  *     registers the scheme last, here Hive's `ProxyLocalFileSystem`.
+  * Both are JVM-wide. Spark reads the cache size once, when code generation
+  * first runs in the JVM, and Hadoop caches one `file:` FileSystem per
+  * JVM and user, so the first configuration that creates it wins: a
+  * session built after another one in the same JVM may not get either.
+  * `Bench` and `Verify` build their own sessions and get neither yet.
   */
 object GraftSession {
   def cpus: Int =
@@ -31,6 +52,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFs.ForFileContext].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // native SQL functions (dot_product, ...) available from spark.sql

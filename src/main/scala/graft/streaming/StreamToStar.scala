@@ -145,6 +145,10 @@ object StreamToStar {
               "merge group cancelled after a sibling timeout")
           sc.setJobGroup(group, s"star merges (batch $batchId)",
             interruptOnCancel = true)
+          // a pool thread inherits the local properties of the thread that
+          // spawned it, e.g. the stream thread's "start at ..." call site:
+          // clear it so each job is named by the code that runs it
+          sc.clearCallSite()
           try body() finally sc.clearJobGroup()
         }
       }
@@ -285,10 +289,10 @@ object StreamToStar {
   }
 
   /** File-source variant (same pipeline; used for tests and batch replay).
-    * `_seq` is attached per micro-batch (window functions are a batch-side
-    * operation; inside foreachBatch the frame is a plain DataFrame).
-    */
-  /** `filesPerTrigger` sizes the micro-batches: 1 mirrors the reference's
+    * `_seq` is attached per micro-batch inside foreachBatch, from each
+    * row's file name and position ([[SalesFeed.withArrivalSeq]]).
+    *
+    * `filesPerTrigger` sizes the micro-batches: 1 mirrors the reference's
     * per-file arrival (and is what the restart tests exercise); larger
     * values amortize the fixed per-batch merge cost over more rows — the
     * throughput lever, since every merge is one set-oriented pass whatever
@@ -322,7 +326,7 @@ object StreamToStar {
   /** JSON-lines variant: consumes the Kafka-shaped messages RunProducer
     * writes when no broker exists (one JSON object per line — the exact
     * payload the Kafka topic would carry), so the producer→consumer loop
-    * closes broker-free. Arrival order = (file rank, position), same as
+    * closes broker-free. Arrival order = (file name, position), same as
     * the CSV path. */
   def startFromJsonFiles(
       spark: SparkSession, glob: String,

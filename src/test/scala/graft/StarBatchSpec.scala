@@ -158,4 +158,36 @@ class StarBatchSpec extends SparkSpec {
       allTables.foreach(t => assert(replayed(t) === expected(t), s"[$failOn] $t"))
     }
   }
+
+  test("a batch's merge jobs are named by the code that runs them, not by an inherited call site") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.DurationInt
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = spark.sparkContext
+    // A pool thread inherits the local properties of the thread that
+    // spawned it: in a stream, the stream thread's "start at ..." call
+    // site. Plant a stale call site on every thread of the global pool
+    // (each task holds its thread until all have started).
+    def onEveryPoolThread(f: => Unit): Unit = {
+      val n = Runtime.getRuntime.availableProcessors
+      val started = new java.util.concurrent.CountDownLatch(n)
+      Await.result(Future.sequence((1 to n).map(_ => Future {
+        f
+        started.countDown()
+        started.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      })), 1.minute)
+    }
+    val stale = "stale call site"
+    val feedDir = Files.createTempDirectory("graft-callsite-feed").toString
+    SmallStarFeed.write(feedDir, Seq("0"), nRows = 20, badEvery = 7)
+    val store = new BucketedMergeWriter(spark,
+      Files.createTempDirectory("graft-callsite-tables").toString, nBuckets = 4)
+    onEveryPoolThread(sc.setCallSite(stale))
+    val names = try jobsDuring(StreamToStar.processBatch(
+        SalesFeed.readCsv(spark, s"$feedDir/MOCK_DATA_*.csv"), store, 0L, Some("audit_verdicts")))
+      .map(_.stageInfos.maxBy(_.stageId).name)
+    finally onEveryPoolThread(sc.clearCallSite())
+    assert(!names.contains(stale), names)
+    assert(names.exists(_.contains("BucketedMergeWriter.scala")), names)
+  }
 }

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.plans.BucketedMergeWriter
 import graft.sources.SalesFeed
@@ -18,31 +15,9 @@ class VersionSchemaSpec extends SparkSpec {
 
   private val tables = RunStar.starTables ++ Seq("dead_letter", "audit_verdicts")
 
-  /** Runs `body` and returns, per Spark job it started, the first
-    * call-site line of the job's stages. A marker job run afterwards
-    * proves the listener bus has delivered every earlier job start. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val marker = s"marker-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    @volatile var markerSeen = false
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("graft.test.marker") == marker))
-          markerSeen = true
-        else seen.add(js.stageInfos.map(_.details.linesIterator.take(1).mkString).mkString(";"))
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setLocalProperty("graft.test.marker", marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(markerSeen, "listener bus did not deliver the marker job")
-    } finally sc.removeSparkListener(l)
-    seen.asScala.toSeq
-  }
+  /** Per Spark job `body` started, the first call-site line of its stages. */
+  private def jobLines(body: => Unit): Seq[String] =
+    jobsDuring(body).map(_.stageInfos.map(_.details.linesIterator.take(1).mkString).mkString(";"))
 
   /** A job started by `DataFrameReader.parquet` is a schema inference:
     * with a schema given, the reader starts none. */
@@ -73,9 +48,9 @@ class VersionSchemaSpec extends SparkSpec {
     checkRemembered()
 
     // resolving every table is planning only: no job at all
-    assert(jobsDuring(tables.foreach(t => store.read(t).schema)) === Nil)
+    assert(jobLines(tables.foreach(t => store.read(t).schema)) === Nil)
     // the next micro-batch reads every table's live versions and merges
-    val merged = jobsDuring(
+    val merged = jobLines(
       StreamToStar.processBatch(feed("1"), store, 1L, Some("audit_verdicts")))
     assert(merged.nonEmpty)
     assert(inference(merged) === Nil)
@@ -86,10 +61,10 @@ class VersionSchemaSpec extends SparkSpec {
     val reopened = new BucketedMergeWriter(spark, root, nBuckets = 4, compactAfter = 1)
     val live = store.committedVersions("dim_store").last
     assert(reopened.rememberedSchema("dim_store", live) === None)
-    assert(inference(jobsDuring(reopened.read("dim_store").count())).size === 1)
+    assert(inference(jobLines(reopened.read("dim_store").count())).size === 1)
     assert(reopened.rememberedSchema("dim_store", live) ===
       store.rememberedSchema("dim_store", live))
-    assert(inference(jobsDuring(reopened.read("dim_store").count())) === Nil)
+    assert(inference(jobLines(reopened.read("dim_store").count())) === Nil)
     assert(reopened.read("dim_store").filter(col("store_region") === "north").count() === 1L)
   }
 }
