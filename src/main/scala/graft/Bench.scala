@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, materializing each result fully through the noop
   * sink (every projected column is computed and serialized — unlike
   * `.count()`, which lets Spark skip column evaluation and overstates the
   * engine). Failures are reported per-query, never silently swallowed into
-  * the timing. Prints ONE JSON line.
+  * the timing. Prints ONE JSON line. Plans under [[GraftSession.local]],
+  * the session the tests, `PlanDump` and the benchmark harness use.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", GraftSession.cpus)
 
     // warm up codegen/IO paths once so the first measured query doesn't
     // pay JVM cold-start (first table present in the dir — partial dirs

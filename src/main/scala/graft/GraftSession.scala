@@ -28,11 +28,25 @@ import org.apache.spark.sql.SparkSession
   *     forks in a steady-state batch, 369 in a checkpointed one; 0 with
   *     [[LocalFs]]). Left unset, `file:` resolves to whichever jar
   *     registers the scheme last, here Hive's `ProxyLocalFileSystem`.
-  * Both are JVM-wide. Spark reads the cache size once, when code generation
-  * first runs in the JVM, and Hadoop caches one `file:` FileSystem per
-  * JVM and user, so the first configuration that creates it wins: a
-  * session built after another one in the same JVM may not get either.
-  * `Bench` and `Verify` build their own sessions and get neither yet.
+  *
+  * The session is built `.withExtensions(new GraftExtensions)`: graft's SQL
+  * functions (`dot_product`, `etld1`, ...) and its two optimizer rules
+  * (`BandedThetaJoinRule`, `BloomJoinRule`) are part of it from the first
+  * query, and `newSession()` passes them on to every derived session. So
+  * no query's plan depends on which queries ran before it. This is the
+  * same class a cluster deployer names in `spark.sql.extensions`. At the
+  * 64 MB broadcast threshold here, `BloomJoinRule`'s envelope
+  * `(threshold, maxCreationBytes]` is empty: the rule does not fire until
+  * a deployer lowers `spark.sql.autoBroadcastJoinThreshold`.
+  *
+  * Every main builds its session here: `Bench`, `Verify`, `PlanDump`, the
+  * star runners, the tests and the benchmark harness plan under one
+  * config. Three settings are JVM-wide. Spark reads the cache size once,
+  * when code generation first runs in the JVM; Hadoop caches one `file:`
+  * FileSystem per JVM and user, so the first configuration that creates
+  * it wins; and `getOrCreate` returns an existing session without
+  * applying extensions. A session built after another one in the same JVM
+  * may get none of the three.
   */
 object GraftSession {
   def cpus: Int =
@@ -56,12 +70,9 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[LocalFs.ForFileContext].getName)
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // native SQL functions (dot_product, ...) available from spark.sql
-    // text out of the box; same registration path as
-    // spark.sql.extensions=graft.functions.GraftExtensions
-    graft.functions.GraftExtensions.register(spark)
     spark
   }
 }

@@ -919,12 +919,11 @@ object QueryCatalog {
       |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
       |FROM lineitem GROUP BY 1""".stripMargin
 
-  /** The SQL function registry (functions/GraftExtensions): the native
-    * DotProduct expression invoked through `spark.sql` text, not the Column
-    * API — proving the registration path end to end. Same sequential-fold
+  /** The SQL function registry (functions/GraftExtensions, attached when
+    * the session is built): the native DotProduct expression invoked
+    * through `spark.sql` text, not the Column API. Same sequential-fold
     * cosine as q26, so the oracle reuses the list_zip fold. */
   def q43SqlDotProduct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     t(s, dir, "embeddings").filter(col("vec_id") < 40)
       .createOrReplaceTempView("graft_q43_emb")
     s.sql("""

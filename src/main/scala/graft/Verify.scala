@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -9,7 +8,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * prefix) — and mirrors each line to stdout. The r14 driver artifact
   * came back empty with no way to tell "nothing ran" from "comparator
   * died"; the manifest is the per-query signal that survives a dead
-  * comparator, parsable by anything that can split on tabs. */
+  * comparator, parsable by anything that can split on tabs. Runs under
+  * [[GraftSession.local]], in `QueryCatalog.entries` order, so two runs
+  * write the same manifest and put the same block pressure on each query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -17,15 +18,7 @@ object Verify {
     // iteration on a subset; the driver's 2-arg call runs everything.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify", GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     val manifest = Paths.get(s"$outDir/manifest.tsv")
     Files.writeString(manifest, "") // fresh file per run
@@ -34,9 +27,9 @@ object Verify {
       Files.writeString(manifest, line + "\n",
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    QueryCatalog.entries
+      .filter { case (name, _, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn, _) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

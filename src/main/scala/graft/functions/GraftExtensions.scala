@@ -4,16 +4,22 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers the native graft
-  * expressions with the SQL function registry, so they are callable from
-  * `spark.sql` (not only the Column API):
+/** SparkSessionExtensions entry point, the one path by which graft's SQL
+  * functions and optimizer rules reach a session. It registers the native
+  * graft expressions with the SQL function registry, so they are callable
+  * from `spark.sql` (not only the Column API), and injects graft's two
+  * optimizer rules: `BandedThetaJoinRule` into the fixed-point
+  * operator-optimization batches, `BloomJoinRule` into the Once batch
+  * that follows them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // programmatic
-  *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * .withExtensions(new GraftExtensions)  // what graft.GraftSession.local builds with
+  * // or on a cluster: --conf spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")
   * }}}
+  *
+  * Extensions apply when a session is built, and `newSession()` passes
+  * them on; a session that is already built does not get them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,8 +29,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // banded theta joins (abs(a.t - b.t) <= w with no equi key) rewrite to
     // the bucketed equi-join instead of a nested-loop plan
     ext.injectOptimizerRule(_ => graft.plans.BandedThetaJoinRule)
-    // Bloom runtime filters for small-but-unbroadcastable build sides
-    ext.injectOptimizerRule(_ => graft.plans.BloomJoinRule)
+    // Bloom runtime filters for small-but-unbroadcastable build sides,
+    // once, after filter inference (BloomJoinRule's scaladoc says why)
+    ext.injectPreCBORule(_ => graft.plans.BloomJoinRule)
   }
 }
 
@@ -52,7 +59,7 @@ object GraftExtensions {
   /** The SQL-callable surface: every entry is pure codegen'd Catalyst
     * (DotProduct is the one custom Expression; norm/cosine compose it with
     * built-ins, exactly like their Column-API twins in VectorFunctions). */
-  private[functions] val sqlFunctions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private val sqlFunctions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("dot_product", new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       arity("dot_product(a, b)", 2)(c => DotProduct(asVec(c.head), asVec(c(1))))),
     ("vec_norm", new ExpressionInfo(classOf[DotProduct].getName, "vec_norm"),
@@ -98,19 +105,5 @@ object GraftExtensions {
     case _ => throw new IllegalArgumentException(
       s"$fn: the n-gram size must be an INTEGER LITERAL (the generator's " +
         "output schema is fixed at plan time)")
-  }
-
-  /** Register graft functions AND the banded-theta-join optimizer rule on
-    * an already-built session (the extensions class only hooks
-    * construction; `experimental.extraOptimizations` is the sanctioned
-    * post-hoc injection point for optimizer rules). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    sqlFunctions.foreach { case (name, info, builder) =>
-      org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-        spark, name, info, builder)
-    }
-    val cur = spark.experimental.extraOptimizations
-    val rules = Seq(graft.plans.BandedThetaJoinRule, graft.plans.BloomJoinRule)
-    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
   }
 }

@@ -42,14 +42,21 @@ import org.apache.spark.sql.types._
   *   - build side's estimated size in (autoBroadcastJoinThreshold,
   *     spark.graft.bloomJoinRule.maxCreationBytes]: under the broadcast
   *     threshold Spark hash-joins map-side and a pre-filter buys nothing,
-  *     over the cap the filter itself is too expensive to build;
+  *     over the cap the filter itself is too expensive to build. When the
+  *     cap is not above the threshold the envelope is empty and the rule
+  *     returns the plan before it reads any join's stats. That is the case
+  *     at [[graft.GraftSession]]'s defaults (64 MB both), so there the
+  *     rule does not fire until a deployer lowers the threshold;
   *   - probe side at least `spark.graft.bloomJoinRule.minSizeRatio` ×
   *     build side (filtering the small side of a balanced join is noise);
   *   - build side fully deterministic (the subquery re-executes it);
   *   - skipped if the probe side already carries a Bloom probe on the
-  *     same key (idempotent under the fixed-point batch, and defers to
-  *     Spark's own runtime filter when that already fired), or if either
-  *     side is streaming.
+  *     same key (idempotent), or if either side is streaming.
+  *
+  * [[graft.functions.GraftExtensions]] runs it once, after filter
+  * inference (`injectPreCBORule`): inside the fixed-point batches,
+  * InferFiltersFromConstraints would copy the probe filter across the
+  * join key onto the build side.
   *
   * Differs from Spark's InjectRuntimeFilter envelope: that rule requires
   * a selective filter on the creation side; this one fires for the
@@ -119,7 +126,15 @@ object BloomJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     })
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+    // No envelope, no work: no join's stats are read. A threshold <= 0
+    // means the user DISABLED broadcast joins to force shuffle plans —
+    // "over the broadcast threshold" would then cover every build side
+    // down to one row and tax every join with an extra build-side scan;
+    // the envelope is defined relative to a real threshold, so without
+    // one the rule sits out (the explicit bloomFilteredJoin API remains
+    // available). A cap at or under the threshold leaves it empty.
+    val (bcast, cap) = (BigInt(conf.autoBroadcastJoinThreshold), maxCreationBytes)
+    if (!enabled || bcast <= 0 || cap <= bcast) return plan
     plan.transformUp {
       case j @ Join(l, r, jt, Some(cond), hint)
           if (jt == Inner || jt == LeftSemi) && !l.isStreaming && !r.isStreaming =>
@@ -133,17 +148,10 @@ object BloomJoinRule extends Rule[LogicalPlan] with PredicateHelper {
               a.references.subsetOf(r.outputSet) => (b, a)
         }
         equi match {
-          case Some((lk, rk)) if conf.autoBroadcastJoinThreshold > 0 =>
-            // threshold <= 0 means the user DISABLED broadcast joins to
-            // force shuffle plans — "over the broadcast threshold" would
-            // then cover every build side down to one row and tax every
-            // join with an extra build-side scan; the envelope is defined
-            // relative to a real threshold, so without one the rule sits
-            // out (the explicit bloomFilteredJoin API remains available)
+          case Some((lk, rk)) =>
             val (lSize, rSize) = (l.stats.sizeInBytes, r.stats.sizeInBytes)
-            val bcast = BigInt(conf.autoBroadcastJoinThreshold)
             def fits(creSize: BigInt, appSize: BigInt, cre: LogicalPlan) =
-              creSize > bcast && creSize <= maxCreationBytes &&
+              creSize > bcast && creSize <= cap &&
                 appSize >= creSize * minSizeRatio && deterministicPlan(cre)
             if (jt == LeftSemi || rSize <= lSize) {
               // build from the right, filter the left

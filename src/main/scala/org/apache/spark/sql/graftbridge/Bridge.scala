@@ -19,14 +19,4 @@ object Bridge {
     * job — never the unbounded wait of the public `get`. */
   def observationResult(obs: org.apache.spark.sql.Observation): Map[String, Any] =
     obs.getOrEmpty
-
-  /** Register a function on an ALREADY-BUILT session (SparkSessionExtensions
-    * only hooks session construction; `sessionState` is private[sql], hence
-    * bridged here). Idempotent — re-registration overwrites. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 }

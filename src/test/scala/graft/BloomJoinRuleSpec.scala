@@ -34,6 +34,8 @@ class BloomJoinRuleSpec extends SparkSpec {
         s"expected an injected bloom filter subquery:\n$p")
       assert(p.contains("might_contain"),
         s"expected the probe-side might_contain filter:\n$p")
+      assert("might_contain".r.findAllIn(p).size == 1,
+        s"the probe filter must not be copied onto the build side:\n$p")
       val got = j.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .sortBy(_._1).toSeq
       // recompute with the rule off — identical rows required
@@ -98,6 +100,15 @@ class BloomJoinRuleSpec extends SparkSpec {
       val p = optimized(probe.join(build, col("k") === col("bk")))
       assert(!p.contains("might_contain"),
         s"no real threshold, no envelope — rule must not fire:\n$p")
+    }
+    // threshold = maxCreationBytes (the factory default, 64 MB both) is
+    // also an empty envelope: this shape fires at threshold 1024 with
+    // the default cap (first test), and must not once the cap is 1024
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024",
+        "spark.graft.bloomJoinRule.maxCreationBytes" -> "1024") {
+      val p = optimized(probe.join(build, col("k") === col("bk")))
+      assert(!p.contains("might_contain"),
+        s"threshold = maxCreationBytes, empty envelope — rule must not fire:\n$p")
     }
   }
 

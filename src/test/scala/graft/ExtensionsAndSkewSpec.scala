@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
 
-/** SQL-registry extension wiring + skew-salting aggregates. */
+/** SQL functions from the extensions `GraftSession.local` builds in, and
+  * skew-salting aggregates. */
 class ExtensionsAndSkewSpec extends SparkSpec {
   import spark.implicits._
 
-  test("dot_product / vec_norm / cosine_sim are callable from SQL via register()") {
-    graft.functions.GraftExtensions.register(spark)
+  test("dot_product / vec_norm / cosine_sim are callable from SQL in the factory session") {
     Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f)), (Array(1.0f, 0.0f), Array(0.0f, 1.0f)))
       .toDF("a", "b").createOrReplaceTempView("vecs")
     val rows = spark.sql(
@@ -21,7 +21,6 @@ class ExtensionsAndSkewSpec extends SparkSpec {
   }
 
   test("ngrams / ngrams_pos are SQL-callable generators; non-literal n rejected") {
-    graft.functions.GraftExtensions.register(spark)
     Seq((1L, "The  Quick brown fox")).toDF("doc_id", "text")
       .createOrReplaceTempView("ngdocs")
     val sh = spark.sql("SELECT doc_id, ngrams(text, 2) AS shingle FROM ngdocs")
@@ -38,7 +37,6 @@ class ExtensionsAndSkewSpec extends SparkSpec {
   }
 
   test("nfc_normalize is SQL-callable and matches java.text.Normalizer") {
-    graft.functions.GraftExtensions.register(spark)
     Seq(("café", "café")).toDF("dec", "com").createOrReplaceTempView("nfcv")
     val r = spark.sql("SELECT nfc_normalize(dec) = com AS eq, length(nfc_normalize(dec)) AS l FROM nfcv")
       .head()
@@ -69,7 +67,6 @@ class ExtensionsAndSkewSpec extends SparkSpec {
     assert(jw("", "") === 0.0 && jw("a", "") === 0.0, "empty strings score 0")
     // SQL-callable under the DuckDB name; codegen'd (no UDF) — the input
     // is id-dependent so constant folding can't collapse the plan
-    graft.functions.GraftExtensions.register(spark)
     val r = spark.range(2).selectExpr(
       "jaro_winkler_similarity(CASE WHEN id = 0 THEN 'martha' ELSE 'zzz' END, 'marhta') AS s")
     assert(math.abs(r.orderBy(org.apache.spark.sql.functions.desc("s"))
