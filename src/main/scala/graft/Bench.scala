@@ -12,6 +12,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench", GraftSession.cpus)
+    val sc = spark.sparkContext
 
     // warm up codegen/IO paths once so the first measured query doesn't
     // pay JVM cold-start (first table present in the dir — partial dirs
@@ -40,33 +41,30 @@ object Bench {
     // "regression" waiting to trip. Failures are ignored here; the
     // measured loop reports them.
     selected.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Materialize.scoped(sc)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       catch { case _: Throwable => () }
     }
-    // Drop the previous query's leaked localCheckpoint blocks OUTSIDE the
-    // timed window: every `.materialized` frame parks its partitions in
+    // Each attempt is one Materialize scope, freed OUTSIDE the timed
+    // window: otherwise every `.materialized` frame parks its partitions in
     // the BlockManager until the driver GC happens to collect the RDD
-    // handle, so a 300-query run otherwise accumulates storage pressure
-    // that inflates LATER queries' times nondeterministically (measured
-    // r17: q128 0.3 s isolated vs 4.5 s late in a full run, same binary).
-    // This is measurement hygiene, not a result change — a real
-    // deployment runs one query per job and never sees a neighbor's
-    // blocks. Timing methodology (min-of-2, noop sink) is unchanged.
-    def sweepBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    sweepBlocks()
+    // handle, so a 300-query run accumulates storage pressure that
+    // inflates LATER queries' times nondeterministically (measured r17:
+    // q128 0.3 s isolated vs 4.5 s late in a full run, same binary). This
+    // is measurement hygiene, not a result change — a real deployment runs
+    // one query per job and never sees a neighbor's blocks. Timing
+    // methodology (min-of-2, noop sink) is unchanged.
     val results = selected.map { case (name, fn) =>
       // a failed attempt reports time -1 and is EXCLUDED from the total, so
       // a regression that breaks a query can never improve the headline
       val times = (0 until runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
+        try Materialize.scoped(sc) {
+          val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          Some((System.nanoTime() - t0) / 1e9) // the clock stops before the scope frees
         } catch { case e: Throwable =>
           errors ::= (name -> e.toString.takeWhile(_ != '\n').take(160))
           None
-        } finally sweepBlocks() // between attempts, after the clock stops
+        }
       }
       name -> (if (times.isEmpty) -1.0 else times.min)
     }

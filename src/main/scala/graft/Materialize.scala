@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Config-routable eager materialization — the ONE place every operator
@@ -34,10 +39,9 @@ import org.apache.spark.storage.StorageLevel
   *     this library's bounded depths (PageRank ≤ 50, BPE ≤ 64 rounds;
   *     analysis cost grows quadratically with depth), wrong for
   *     unbounded loops, where `reliable` is the fault-tolerant choice
-  *     that also cuts lineage. And entries park in the CacheManager
-  *     for the session (nothing unpersists them automatically — run
-  *     `spark.catalog.clearCache()` between pipelines): a mode for
-  *     bounded batch pipelines, not resident services. A THIRD caveat
+  *     that also cuts lineage. Outside a [[scoped]] block, entries park
+  *     in the CacheManager for the session and every later query scans
+  *     them; inside one, the scope's exit removes them. A THIRD caveat
   *     (the r15 review): the recompute-on-block-loss guarantee does
   *     NOT hold across the table store's vacuum. Inside
   *     [[graft.plans.BucketedMergeWriter]] commit paths, kept lineage
@@ -54,18 +58,47 @@ import org.apache.spark.storage.StorageLevel
   *
   * All three produce IDENTICAL results (MaterializeSpec proves it on the
   * iterative pageRankDirected); only failure semantics and storage
-  * placement differ. Streaming monitors' per-batch frames are swept by
-  * [[graft.streaming.BlockSweep]] via the persistent-RDD diff, which
-  * covers `local` and `persist`; under `reliable` the per-batch files
-  * rely on the cleaner flag above.
+  * placement differ.
+  *
+  * '''Scopes.''' [[scoped]] frees exactly what was materialized inside it:
+  * a star micro-batch, a monitor's micro-batch, one Bench attempt or one
+  * Verify query. The scope puts its id in the thread's local property
+  * [[ScopeKey]]; `apply` records a release action under that id, and the
+  * scope's exit runs them. Nothing materialized inside a scope may be
+  * read after the scope returns. Frames made outside any scope are not
+  * recorded, and the ContextCleaner frees their blocks after driver GC.
+  * `local` releases the checkpointed RDD (the `LogicalRDD` under the
+  * returned frame) with `SparkContext.unpersistRDD` through [[Bridge]]:
+  * the same block removal as `RDD.unpersist`, without its WARN that a
+  * locally checkpointed RDD "cannot be recomputed after unpersisting" —
+  * that is the point of the release. `persist` releases with
+  * `Dataset.unpersist`, which also drops the CacheManager entry.
+  * `reliable` records nothing: its files follow the cleaner flag above.
   */
 object Materialize {
 
-  def apply[T](ds: Dataset[T]): Dataset[T] =
+  /** The local property that names the open [[scoped]] block. A thread
+    * that runs work for a scope on another thread (a pooled future) copies
+    * it there, because pooled threads keep stale local properties. */
+  private[graft] val ScopeKey = "graft.materialize.scope"
+
+  private val nextScope = new AtomicLong
+  /** Open scopes: id → release actions recorded under it. */
+  private val open = new ConcurrentHashMap[String, ConcurrentLinkedQueue[() => Unit]]()
+
+  def apply[T](ds: Dataset[T]): Dataset[T] = {
+    val sc = ds.sparkSession.sparkContext
     ds.sparkSession.conf.get("spark.graft.materialize", "local") match {
-      case "local" => ds.localCheckpoint(eager = true)
+      case "local" =>
+        val out = ds.localCheckpoint(eager = true)
+        out.queryExecution.logical match {
+          case r: LogicalRDD =>
+            val id = r.rdd.id
+            record(sc, () => Bridge.unpersistRdd(sc, id))
+          case _ => ()
+        }
+        out
       case "reliable" =>
-        val sc = ds.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty) {
           val dir = ds.sparkSession.conf.getOption("spark.graft.checkpointDir")
             .getOrElse(throw new IllegalStateException(
@@ -77,10 +110,39 @@ object Materialize {
       case "persist" =>
         val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
         p.count() // persist is lazy; the count makes eagerness uniform across modes
+        record(sc, () => p.unpersist(blocking = false))
         p
       case other => throw new IllegalArgumentException(
         s"spark.graft.materialize must be local|reliable|persist, got '$other'")
     }
+  }
+
+  /** Records `release` under this thread's open scope, if any. A stale id
+    * (its scope already closed) records nothing. */
+  private def record(sc: SparkContext, release: () => Unit): Unit =
+    Option(sc.getLocalProperty(ScopeKey)).foreach { id =>
+      open.computeIfPresent(id, (_, rs) => { rs.add(release); rs })
+    }
+
+  /** Runs `body` as one scope and, on exit, releases exactly what `apply`
+    * materialized inside it, on this thread or on any thread that carries
+    * its [[ScopeKey]]. `free` is read at exit: false keeps the blocks (a
+    * caller that cannot prove its readers have stopped), and the
+    * ContextCleaner reclaims them later. Scopes nest: the caller's scope id
+    * is restored on exit. */
+  def scoped[T](sc: SparkContext, free: => Boolean = true)(body: => T): T = {
+    val id = s"scope-${nextScope.incrementAndGet()}"
+    val outer = sc.getLocalProperty(ScopeKey)
+    val releases = new ConcurrentLinkedQueue[() => Unit]()
+    open.put(id, releases)
+    sc.setLocalProperty(ScopeKey, id)
+    try body
+    finally {
+      sc.setLocalProperty(ScopeKey, outer)
+      open.remove(id)
+      if (free) releases.forEach(_())
+    }
+  }
 
   /** `df.materialized` — the call-site form every operator uses. */
   implicit final class MaterializeOps[T](private val ds: Dataset[T]) extends AnyVal {

@@ -30,7 +30,10 @@ object Verify {
     QueryCatalog.entries
       .filter { case (name, _, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn, _) =>
-      try {
+      // one Materialize scope per query: what the query materialized is
+      // freed when it lands, so 300 queries put no storage pressure on
+      // later ones (the Bench rationale, r17)
+      try Materialize.scoped(spark.sparkContext) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // footer-metadata count of what actually landed — cheap, and it
@@ -39,20 +42,7 @@ object Verify {
         note(s"$name\t$rows\tok")
       } catch { case e: Throwable =>
         note(s"$name\t-1\tfailed: ${Option(e.getMessage).getOrElse(e.getClass.getName).replaceAll("[\\t\\n\\r]", " ").take(200)}")
-      } finally
-        // drop the finished query's leaked localCheckpoint blocks — every
-        // `.materialized` frame parks partitions in the BlockManager until
-        // driver GC; across 300 queries that storage pressure slows later
-        // queries (the Bench sweep's rationale, r17).
-        // INVARIANT (r17 advice): this sweeps EVERY persistent RDD, and
-        // localCheckpointed RDDs have truncated lineage — so no catalog
-        // query may hand a materialized frame (cached dim, temp view over
-        // a .materialized frame) to a LATER query. Queries are registered
-        // as self-contained (SparkSession, sfDir) => DataFrame closures,
-        // and sharing results across queries is contractually out anyway
-        // (cross-query result caching); a future shared frame must move
-        // to the BlockSweep created-since-diff pattern instead.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -73,7 +73,7 @@ object ContentRegistry {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
           val w = fingerprinted(batch, passCols)
             .materialized // read by the slice AND the doc merge
           if (!w.isEmpty) {

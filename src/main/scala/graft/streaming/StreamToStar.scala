@@ -30,14 +30,14 @@ import graft.Materialize.MaterializeOps
   * part-way leaves some tables at the new state and others at the old one,
   * and replaying the batch (what the checkpoint does after a failure)
   * converges every table, because every merge is idempotent.
+  *
+  * Each micro-batch is one [[graft.Materialize.scoped]] block: what the
+  * batch materializes is freed when it ends, and nothing it materializes
+  * may be read after that — cross-batch state lives in the store. The
+  * scope frees only what the batch recorded, so star pipelines, streaming
+  * monitors and user caches in one JVM run their batches side by side.
   */
 object StreamToStar {
-
-  /** Serializes each batch's persistent-RDD snapshot→sweep window (see
-    * processBatch) across concurrent star pipelines in one JVM. */
-  // shared with BlockSweep: star batches and the streaming monitors in
-  // one JVM must serialize their diff windows against each other
-  private def sweepLock = BlockSweep.lock
 
   val dimSpecs: Seq[(String, DataFrame => DataFrame, Seq[String], String)] = Seq(
     ("dim_customer", StarSchema.customerRows _, Seq("source_customer_id"), "customer_sk"),
@@ -91,27 +91,27 @@ object StreamToStar {
     require(auditTable.isEmpty || batchId >= 0L,
       "processBatch: auditTable requires an explicit non-negative batchId " +
         "(verdicts merge on (batch_id, rule))")
-    // Deterministic block cleanup: everything this batch localCheckpoints
-    // (the feed materialization + each merge's internal frames) is dead
-    // once the last merge lands, so free the blocks at batch end instead
-    // of waiting for the ContextCleaner's GC-driven sweep — a serve-mode
-    // driver between GCs would otherwise accumulate every batch's blocks.
+    // Every frame this batch materializes (the feed + each merge's internal
+    // frames) is dead once the last merge lands: the batch is one
+    // [[graft.Materialize.scoped]] block, which frees exactly those blocks
+    // at batch end instead of waiting for the ContextCleaner's GC-driven
+    // sweep. Nothing materialized here may escape the batch; the dims
+    // frames `mergeDim` returns are read only by this batch's level 2.
+    // Other pipelines, monitors and user caches in the same JVM are not
+    // touched, so their batches run alongside this one.
     val sc = feed.sparkSession.sparkContext
-    // The snapshot→sweep window is serialized across ALL star batches in
-    // this JVM: the persistent-RDD diff is CONTEXT-global, so a
-    // concurrent batch's just-checkpointed blocks would land in this
-    // batch's diff and be unpersisted mid-flight (localCheckpoints
-    // truncate lineage — unpersisting one is unrecoverable). Unrelated
-    // caching racing a serve-mode pipeline on the same session remains
-    // the caller's hazard (documented; the sweep exists for the
-    // single-pipeline serve deployment).
-    sweepLock.synchronized {
-    val persistedBefore = sc.getPersistentRDDs.keySet
     // set false if some concurrent merge future never provably settled —
-    // the finally sweep must NOT unpersist blocks a zombie merge still
-    // reads (leaking one batch's blocks is recoverable; truncated-lineage
-    // reads under a live writer are not)
+    // the scope must NOT free blocks a zombie merge still reads (leaking
+    // one batch's blocks is recoverable; truncated-lineage reads under a
+    // live writer are not)
     var mergesSettled = true
+    def freeBlocks: Boolean = mergesSettled || {
+      System.err.println(
+        "[graft-batch] WARN: a merge future never settled after cancellation " +
+          "— keeping this batch's blocks (the ContextCleaner reclaims them on " +
+          "GC once the zombie dies)")
+      false
+    }
 
     // Run independent merges (distinct tables, shared read-only inputs)
     // CONCURRENTLY so a level pays max(merge) instead of Σ(merge): each
@@ -130,10 +130,13 @@ object StreamToStar {
       import scala.util.Try
       // every body runs under one cancellable JOB GROUP (set per-thread
       // inside the future): an Await timeout alone would leave the wedged
-      // merge running as a ZOMBIE while the finally sweep unpersists the
+      // merge running as a ZOMBIE while the scope frees the
       // localCheckpoint blocks it still reads, and the batch retry would
       // race it on the same table
       val group = s"graft-star-merges-$batchId-${System.nanoTime()}"
+      // the batch's scope id, copied into each future like the job group:
+      // what a merge materializes is freed with the batch
+      val scope = sc.getLocalProperty(graft.Materialize.ScopeKey)
       // checked at future START: cancelJobGroup only reaches jobs running
       // at call time, so a future still QUEUED behind the wedged one would
       // otherwise start fresh jobs after the cancel
@@ -149,12 +152,16 @@ object StreamToStar {
           // spawned it, e.g. the stream thread's "start at ..." call site:
           // clear it so each job is named by the code that runs it
           sc.clearCallSite()
-          try body() finally sc.clearJobGroup()
+          sc.setLocalProperty(graft.Materialize.ScopeKey, scope)
+          try body() finally {
+            sc.clearJobGroup()
+            sc.setLocalProperty(graft.Materialize.ScopeKey, null)
+          }
         }
       }
       val tries = futures.map(f => Try(Await.result(f, 10.minutes)))
       // a TIMEOUT is not settlement — cancel the job group and re-await so
-      // the wedged merge is actually dead before the sweep/rethrow
+      // the wedged merge is actually dead before the scope frees/rethrows
       if (tries.exists(_.failed.toOption
           .exists(_.isInstanceOf[java.util.concurrent.TimeoutException]))) {
         cancelled.set(true)          // queued futures abort at start
@@ -162,106 +169,95 @@ object StreamToStar {
         // settlement must be PROVEN, not hoped: a merge wedged outside any
         // Spark job (commit-loop I/O) survives the cancel — if any future
         // is still unfinished after the grace re-await, keep its blocks
-        // (skip the sweep) rather than unpersist under it
+        // (skip the free) rather than unpersist under it
         futures.foreach(f => Try(Await.result(f, 1.minute)))
         if (futures.exists(!_.isCompleted)) mergesSettled = false
       }
       tries.map(_.get)
     }
 
-    // the try opens HERE: the empty-batch return and a throw from any
-    // merge must reach the sweep too, or each retry leaks this batch's
-    // checkpointed blocks
-    try {
-    // ONE eager materialization of the error-tagged feed replaces three
-    // separate scans of the raw source (empty-batch probe, error-presence
-    // check, cache fill): the row/error counts ride the same job as
-    // Observation metrics, and both halves of the split are carved off the
-    // in-memory frame. At per-file arrival granularity those redundant
-    // scans were ~0.4 s of every micro-batch.
-    val obs = org.apache.spark.sql.Observation()
-    val mat = ErrorChannel.tagged(feed, Seq("id"))
-      .observe(obs, count(lit(1)).as("total"), count(col("_error")).as("errs"))
-      .materialized
-    val counts = graft.plans.Observed.poll(obs)
-    val total = counts.flatMap(_.get("total")).map(_.asInstanceOf[Long])
-      .getOrElse(mat.count())
-    if (total == 0L) return
-    val errs = counts.flatMap(_.get("errs")).map(_.asInstanceOf[Long])
-      .getOrElse(mat.filter(col("_error").isNotNull).count())
-    val errors = mat.filter(col("_error").isNotNull)
-    // a slice of the in-memory `mat` — no extra cache
-    val cached = mat.filter(col("_error").isNull)
-      .drop("_error", ErrorChannel.corruptCol)
+    // the scope opens HERE: the empty batch and a throw from any merge
+    // free the batch's blocks too, or each retry would leak them
+    graft.Materialize.scoped(sc, freeBlocks) {
+      // ONE eager materialization of the error-tagged feed replaces three
+      // separate scans of the raw source (empty-batch probe, error-presence
+      // check, cache fill): the row/error counts ride the same job as
+      // Observation metrics, and both halves of the split are carved off the
+      // in-memory frame. At per-file arrival granularity those redundant
+      // scans were ~0.4 s of every micro-batch.
+      val obs = org.apache.spark.sql.Observation()
+      val mat = ErrorChannel.tagged(feed, Seq("id"))
+        .observe(obs, count(lit(1)).as("total"), count(col("_error")).as("errs"))
+        .materialized
+      val counts = graft.plans.Observed.poll(obs)
+      val total = counts.flatMap(_.get("total")).map(_.asInstanceOf[Long])
+        .getOrElse(mat.count())
+      if (total > 0L) {
+        val errs = counts.flatMap(_.get("errs")).map(_.asInstanceOf[Long])
+          .getOrElse(mat.filter(col("_error").isNotNull).count())
+        val errors = mat.filter(col("_error").isNotNull)
+        // a slice of the in-memory `mat` — no extra cache
+        val cached = mat.filter(col("_error").isNull)
+          .drop("_error", ErrorChannel.corruptCol)
 
-    // Level 1: everything that reads only the split feed.
-    val dimMerges = dimSpecs.map { case (name, rows, natKey, sk) => () =>
-      store.mergeDim(name, StarSchema.lastWriteWins(rows(cached), natKey, "_seq"),
-        natKey, sk)
-    } :+ { () =>
-      // dim_date is keyed by the value itself; attributes are derived, so
-      // last-write-wins degenerates to distinct
-      store.mergeDim("dim_date", StarSchema.dateRows(cached),
-        Seq("sale_date"), "date_sk")
-    }
-    val deadLetters = if (errs == 0L) Nil else Seq { () =>
-      // console status from the already-known counts + an error sample —
-      // the reference's per-record status line, scale-safely
-      ErrorChannel.printStatus(total - errs, errs, errors, sample = 20)
-      // Dead-letter writes MERGE on a deterministic content key (md5 of
-      // the serialized record + its error), not append: a micro-batch
-      // replayed after a checkpoint restart upserts the same rows instead
-      // of duplicating them — the same effectively-once contract as the
-      // star tables. The key is pure CONTENT: physical coordinates like
-      // monotonically_increasing_id depend on partition layout and would
-      // change across a restart with different parallelism, silently
-      // re-duplicating the dead letters. Byte-identical bad records
-      // therefore collapse to one row — the right shape for triage (the
-      // console status still reports per-occurrence counts).
-      val record = to_json(struct(
-        feed.columns.filterNot(_ == "_seq").toIndexedSeq.map(col): _*))
-      store.mergeFact("dead_letter",
-        errors.select(
-          md5(concat_ws("|", col("_error"), record)).as("_dl_key"),
-          col("_error"), record.as("record")),
-        Seq("_dl_key"))
-    }
-    val level1 = concurrently(dimMerges ++ deadLetters)
-    val dims = dimSpecs.map(_._1).zip(level1).toMap
-    val dimDate = level1(dimSpecs.size)
+        // Level 1: everything that reads only the split feed.
+        val dimMerges = dimSpecs.map { case (name, rows, natKey, sk) => () =>
+          store.mergeDim(name, StarSchema.lastWriteWins(rows(cached), natKey, "_seq"),
+            natKey, sk)
+        } :+ { () =>
+          // dim_date is keyed by the value itself; attributes are derived, so
+          // last-write-wins degenerates to distinct
+          store.mergeDim("dim_date", StarSchema.dateRows(cached),
+            Seq("sale_date"), "date_sk")
+        }
+        val deadLetters = if (errs == 0L) Nil else Seq { () =>
+          // console status from the already-known counts + an error sample —
+          // the reference's per-record status line, scale-safely
+          ErrorChannel.printStatus(total - errs, errs, errors, sample = 20)
+          // Dead-letter writes MERGE on a deterministic content key (md5 of
+          // the serialized record + its error), not append: a micro-batch
+          // replayed after a checkpoint restart upserts the same rows instead
+          // of duplicating them — the same effectively-once contract as the
+          // star tables. The key is pure CONTENT: physical coordinates like
+          // monotonically_increasing_id depend on partition layout and would
+          // change across a restart with different parallelism, silently
+          // re-duplicating the dead letters. Byte-identical bad records
+          // therefore collapse to one row — the right shape for triage (the
+          // console status still reports per-occurrence counts).
+          val record = to_json(struct(
+            feed.columns.filterNot(_ == "_seq").toIndexedSeq.map(col): _*))
+          store.mergeFact("dead_letter",
+            errors.select(
+              md5(concat_ws("|", col("_error"), record)).as("_dl_key"),
+              col("_error"), record.as("record")),
+            Seq("_dl_key"))
+        }
+        val level1 = concurrently(dimMerges ++ deadLetters)
+        val dims = dimSpecs.map(_._1).zip(level1).toMap
+        val dimDate = level1(dimSpecs.size)
 
-    // Level 2: everything that reads the resolved fact rows.
-    val fact = StarSchema.lastWriteWins(
-      StarSchema.factRows(cached), Seq("source_sale_id"), "_seq")
-    val resolved0 = StarSchema.resolveFactKeys(
-      fact,
-      dims("dim_customer"), dims("dim_seller"), dims("dim_product"),
-      dims("dim_store"), dims("dim_supplier"), dimDate)
-    // with the audit on, the resolved frame is read twice (merge +
-    // verdict aggregates) — materialize once; swept at batch end
-    val resolved =
-      if (auditTable.isDefined) resolved0.materialized else resolved0
-    val audit = auditTable.toSeq.map { tbl => () =>
-      val verdicts = Expectations
-        .audit(resolved, starExpectations, starUniqueKeys)
-        .withColumn("batch_id", lit(batchId))
-      // keyed on (batch_id, rule): a replayed micro-batch overwrites
-      // its own verdict rows — the star tables' effectively-once shape
-      store.mergeFact(tbl, verdicts, Seq("batch_id", "rule"))
-    }
-    concurrently(
-      (() => store.mergeFact("fact_sales", resolved, Seq("source_sale_id"))) +: audit)
-    ()
-    } finally {
-      if (mergesSettled) {
-        val persisted = sc.getPersistentRDDs
-        (persisted.keySet -- persistedBefore)
-          .foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
-      } else System.err.println(
-        "[graft-batch] WARN: a merge future never settled after cancellation " +
-          "— skipping this batch's block sweep (blocks leak; the " +
-          "ContextCleaner reclaims them on GC once the zombie dies)")
-    }
+        // Level 2: everything that reads the resolved fact rows.
+        val fact = StarSchema.lastWriteWins(
+          StarSchema.factRows(cached), Seq("source_sale_id"), "_seq")
+        val resolved0 = StarSchema.resolveFactKeys(
+          fact,
+          dims("dim_customer"), dims("dim_seller"), dims("dim_product"),
+          dims("dim_store"), dims("dim_supplier"), dimDate)
+        // with the audit on, the resolved frame is read twice (merge +
+        // verdict aggregates) — materialize once; freed at batch end
+        val resolved =
+          if (auditTable.isDefined) resolved0.materialized else resolved0
+        val audit = auditTable.toSeq.map { tbl => () =>
+          val verdicts = Expectations
+            .audit(resolved, starExpectations, starUniqueKeys)
+            .withColumn("batch_id", lit(batchId))
+          // keyed on (batch_id, rule): a replayed micro-batch overwrites
+          // its own verdict rows — the star tables' effectively-once shape
+          store.mergeFact(tbl, verdicts, Seq("batch_id", "rule"))
+        }
+        concurrently(
+          (() => store.mergeFact("fact_sales", resolved, Seq("source_sale_id"))) +: audit)
+      }
     }
   }
 

@@ -42,8 +42,8 @@ object StreamingAnn {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         index.ingest(batch)
         if (vacuumEveryBatches > 0 && (batchId + 1) % vacuumEveryBatches == 0)
           index.maintain()

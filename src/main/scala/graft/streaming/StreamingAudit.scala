@@ -40,8 +40,8 @@ object StreamingAudit {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         val verdicts = Expectations.audit(batch, rules, uniqueKeys)
           .withColumn("batch_id", lit(batchId))
         store.mergeFact(verdictTable, verdicts, Seq("batch_id", "rule"))

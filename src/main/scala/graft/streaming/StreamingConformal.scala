@@ -62,8 +62,8 @@ object StreamingConformal {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         // LEFT join: a group with no calibration threshold is the
         // clearest exchangeability break there is — it must surface as
         // an unscored-and-breached verdict row, never vanish silently.

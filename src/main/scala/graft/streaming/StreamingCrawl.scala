@@ -38,8 +38,8 @@ object StreamingCrawl {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         // parsed once, read twice (ok + dead) — materialize
         val recs = Warc.warcTextRecords(batch).toDF().materialized
         val docs = recs.filter(col("ok") === 1)

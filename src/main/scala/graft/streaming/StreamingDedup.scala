@@ -46,8 +46,8 @@ object StreamingDedup {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         val pairs = index.ingest(batch, idCol, textCol)
         // keyed MERGE: replayed batches re-emit the same (doc_a, doc_b)
         // rows and collapse to one — the pair table is exactly-once

@@ -53,8 +53,8 @@ object StreamingDrift {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         val bx = batch.select(col(valueCol).cast("double").as("_x"))
           .filter(col("_x").isNotNull)
         val counts = new Array[Long](bins)

@@ -72,8 +72,8 @@ object StreamingHeavyHitters {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         import spark.implicits._
         // ---- load state ----------------------------------------------
         val (prev, nSeen0, errAll0, floorErr0, upto0) =

@@ -137,8 +137,8 @@ object StreamingPacker {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         processBatch(batch, batchId, store, stateTable, assignTable,
           capacity, rangeWidth, idCol, textCol)
       }

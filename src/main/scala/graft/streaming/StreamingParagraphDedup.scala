@@ -50,8 +50,8 @@ object StreamingParagraphDedup {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
           val paras = Dedup.paragraphRows(batch, idCol, textCol, sepRegex)
             .materialized // read by the window AND both merges
           if (!paras.isEmpty) {

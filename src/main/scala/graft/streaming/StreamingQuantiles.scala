@@ -50,8 +50,8 @@ object StreamingQuantiles {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch block sweep: see BlockSweep's contract
-        BlockSweep.swept(batch.sparkSession.sparkContext) {
+        // per-batch block scope: see Materialize.scoped
+        graft.Materialize.scoped(batch.sparkSession.sparkContext) {
         val pairs = batch.filter(col(valueCol).isNotNull)
           .select(ApproxQuantile.rowHash60(idCols).as("h"),
             col(valueCol).cast("double").as("v"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextAnalysis
+import graft.operators.TrainRounds.bpeTrainRounds
 import org.apache.spark.sql.DataFrame
 
 /** The r18 optimization contract for the BPE trainer: the compiled
@@ -31,7 +32,7 @@ class BpeEquivalenceSpec extends SparkSpec {
     // (~65 s at rounds 4-5, measured r18); equivalence is about values,
     // and the checkpointing path is the shipped one anyway
     val (tF, sF) = TextAnalysis.bpeTrain(docs, rounds, "text")
-    val (tR, sR) = TextAnalysis.bpeTrainRounds(docs, rounds, "text")
+    val (tR, sR) = bpeTrainRounds(docs, rounds, "text")
     assert(tableRows(tF) === tableRows(tR), "merge tables must be bit-identical")
     assert(symRows(sF) === symRows(sR), "symbol tables must be bit-identical")
     assert(tF.schema.map(f => (f.name, f.dataType)) ===
@@ -112,7 +113,7 @@ class BpeEquivalenceSpec extends SparkSpec {
       t._1.collect(); t._2.collect()
     }
     val newJobs = jobs(force(TextAnalysis.bpeTrain(docs, 4, "text")))
-    val oldJobs = jobs(force(TextAnalysis.bpeTrainRounds(docs, 4, "text")))
+    val oldJobs = jobs(force(bpeTrainRounds(docs, 4, "text")))
     info(s"training jobs: compiled=$newJobs rounds-form=$oldJobs")
     assert(newJobs * 2 <= oldJobs,
       s"compiled trainer should need well under half the jobs: new=$newJobs old=$oldJobs")

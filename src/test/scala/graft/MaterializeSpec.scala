@@ -42,6 +42,27 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("persist mode: star batches leave no CacheManager entry behind") {
+    val conf = spark.conf
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val dir = java.nio.file.Files.createTempDirectory("graft-persist-feed").toString
+    SmallStarFeed.write(dir, Seq("0", "1", "2"), nRows = 20, badEvery = 7)
+    val store = new graft.plans.BucketedMergeWriter(spark,
+      java.nio.file.Files.createTempDirectory("graft-persist-tables").toString, nBuckets = 4)
+    // a clean slate, so "no entry left" reads as an empty cache manager
+    spark.catalog.clearCache()
+    try {
+      conf.set("spark.graft.materialize", "persist")
+      for (b <- 0 to 2)
+        graft.streaming.StreamToStar.processBatch(
+          sources.SalesFeed.readCsv(spark, s"$dir/MOCK_DATA_$b.csv"), store, b.toLong,
+          Some("audit_verdicts"))
+    } finally conf.set("spark.graft.materialize", "local")
+    assert(store.read("fact_sales").count() === 18)
+    assert(cacheManager.isEmpty, "each batch's scope must remove the cache entries it made")
+  }
+
   test("unknown mode fails loudly") {
     val conf = spark.conf
     try {

@@ -47,30 +47,26 @@ class NegZeroSpec extends SparkSpec {
   test("no catalog query emits a -0.0 bit pattern in any double cell") {
     // overlap independent read-only queries from a small driver pool
     // (guide §2.6): 300 sequential runs made this the slowest test in
-    // the suite (175 s) with the session mostly idle between jobs.
-    // Waves of 8 with a sweep of leaked localCheckpoint blocks between
-    // waves (the r17 Bench finding) — sweeping is only safe while no
-    // query is in flight, hence the wave barrier.
+    // the suite (175 s) with the session mostly idle between jobs. Each
+    // query is one Materialize scope, so it frees its own blocks when it
+    // ends, whatever the other queries in flight are doing.
     val offenders = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     try {
-      QueryCatalog.entries.grouped(8).foreach { wave =>
-        val tasks = wave.map { case (name, fn, _) =>
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              val df = fn(spark, sf)
-              if (df.schema.fields.exists(f => hasFloaty(f.dataType))) {
-                // sf0.001 catalog outputs are verify-sized; collect is fine
-                val n = df.collect().iterator.map(r => negZeros(r)).sum
-                if (n > 0) offenders.add(s"$name ($n cells)")
-              }
+      val tasks = QueryCatalog.entries.map { case (name, fn, _) =>
+        new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = Materialize.scoped(spark.sparkContext) {
+            val df = fn(spark, sf)
+            if (df.schema.fields.exists(f => hasFloaty(f.dataType))) {
+              // sf0.001 catalog outputs are verify-sized; collect is fine
+              val n = df.collect().iterator.map(r => negZeros(r)).sum
+              if (n > 0) offenders.add(s"$name ($n cells)")
             }
           }
         }
-        import scala.jdk.CollectionConverters._
-        pool.invokeAll(tasks.asJava).asScala.foreach(_.get()) // rethrow failures
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       }
+      import scala.jdk.CollectionConverters._
+      pool.invokeAll(tasks.asJava).asScala.foreach(_.get()) // rethrow failures
     } finally pool.shutdown()
     assert(offenders.isEmpty, {
       import scala.jdk.CollectionConverters._

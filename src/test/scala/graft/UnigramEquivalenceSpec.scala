@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextAnalysis
+import graft.operators.TrainRounds.unigramTrainRounds
 import org.apache.spark.sql.DataFrame
 
 /** The r17 optimization contract for the unigram trainer: the
@@ -27,7 +28,7 @@ class UnigramEquivalenceSpec extends SparkSpec {
                          minSeedCount: Long = 2L, maxWordLen: Int = 12): Unit = {
     val (pF, sF) = TextAnalysis.unigramTrainCore(docs, nIters, maxPieceLen,
       minSeedCount, maxWordLen, "text")
-    val (pR, sR) = TextAnalysis.unigramTrainRounds(docs, nIters, maxPieceLen,
+    val (pR, sR) = unigramTrainRounds(docs, nIters, maxPieceLen,
       minSeedCount, maxWordLen, "text")
     assert(pieceSet(pF) === pieceSet(pR), "piece tables must be bit-identical")
     assert(segSet(sF) === segSet(sR), "segmentations must be bit-identical")

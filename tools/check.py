@@ -11,11 +11,19 @@ parquet files) and compares: row count, column names, dtypes, and values
 Doubles are compared by BIT PATTERN (the way the driver hashes them), not
 pandas equality — pandas treats -0.0 == 0.0, which masked the q163 r9
 mismatch where DuckDB's round() kept -0.0 and Spark's normalized to +0.0.
+
+DuckDB runs under fixed caps (DUCKDB_CAPS): 6 GB of memory, 2 threads and
+at most 8 GB of spill, written to a temporary directory that is deleted on
+exit. An oracle that needs more fails with ORACLE_ERROR, which fails the
+run; it cannot fill the disk or the machine's memory.
 """
-import sys, os, json, glob
+import sys, os, json, glob, shutil, tempfile
 import duckdb
 import numpy as np
 import pandas as pd
+
+DUCKDB_CAPS = {"memory_limit": "6GB", "threads": 2,
+               "max_temp_directory_size": "8GB"}
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -55,8 +63,15 @@ def bit_mismatch(a: pd.DataFrame, b: pd.DataFrame):
 
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="graft-check-")
+    try:
+        check(sys.argv[1], sys.argv[2], spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def check(sf_dir, out_dir, spill):
+    con = duckdb.connect(config=dict(DUCKDB_CAPS, temp_directory=spill))
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
