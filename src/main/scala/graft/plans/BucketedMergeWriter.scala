@@ -15,10 +15,13 @@ import graft.Materialize.MaterializeOps
   *   1. tag batch rows with `_bucket = pmod(xxhash64(natKey), nBuckets)`;
   *   2. read the CURRENT table pruned to touched buckets (partition
   *      pruning — untouched buckets are never scanned, let alone written);
-  *   3. keep existing surrogate keys (LEFT join on the natural key inside
-  *      touched buckets), assign `max+i` to genuinely-new keys — the
-  *      running max lives in the manifest, so no full-table scan is needed
-  *      to continue the sequence;
+  *   3. upsert: ONE null-safe full-outer join on the natural key inside
+  *      the touched buckets, where the batch row wins and every stored row
+  *      the batch does not touch is kept (see [[upsert]]). Facts and dims
+  *      share it; a dim adds only its surrogate key column — the stored
+  *      key where one exists, `max+i` for genuinely-new keys. The running
+  *      max lives in the manifest, so no full-table scan is needed to
+  *      continue the sequence;
   *   4. write the touched buckets' new contents into a FRESH version
   *      directory `v{N}/_bucket=B/…`, then atomically swap the `_MANIFEST`
   *      file, which maps every live bucket to the version directory holding
@@ -488,6 +491,12 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
       System.err.println(s"[graft] compaction of $name abandoned: ${e.getMessage}"))
   }
 
+  /** Version directories currently ON DISK (live + superseded + crash
+    * orphans), ascending — the quantity vacuum bounds; compare with
+    * [[committedVersions]] (reachable history) to see what maintenance
+    * would reclaim. */
+  def onDiskVersionDirs(name: String): Seq[Long] = CommitProtocol.versionDirs(dir(name))
+
   /** Delete version directories no manifest entry references (crashed
     * commits, superseded versions) — except in-flight ones a concurrent
     * writer has reserved but not yet committed. Runs under the table lock
@@ -501,23 +510,6 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
     * everything dead immediately (the caller guarantees no outstanding
     * readers). Crash orphans (never referenced by any manifest) age by
     * directory mtime — no reader can ever have resolved them. */
-  /** Version directories currently ON DISK (live + superseded + crash
-    * orphans), ascending — the quantity vacuum bounds; compare with
-    * [[committedVersions]] (reachable history) to see what maintenance
-    * would reclaim. */
-  def onDiskVersionDirs(name: String): Seq[Long] = {
-    val d = Paths.get(dir(name))
-    if (!Files.exists(d)) Nil
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
-
   override def vacuum(name: String, retainMillis: Long = 0L): Unit = {
     if (!exists(name)) return // no-op, the TableStore contract
     CommitProtocol.lockFor(dir(name)).synchronized {
@@ -525,8 +517,8 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
       val tomb = readTombstones(name)
       val now = System.currentTimeMillis()
       val reclaimed = CommitProtocol.vacuumVersions(dir(name), live, retainMillis,
-        p => now - tomb.getOrElse(p.getFileName.toString.drop(1).toLong,
-          Files.getLastModifiedTime(p).toMillis)).toSet
+        v => now - tomb.getOrElse(v,
+          Files.getLastModifiedTime(Paths.get(versionDir(name, v))).toMillis)).toSet
       reclaimed.foreach(v => versionSchemas.remove((name, v)))
       // prune tombstones of reclaimed versions — append-only growth would
       // otherwise make every vacuum re-parse the table's full commit history
@@ -540,174 +532,118 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
   }
 
   override def mergeDim(name: String, batch: DataFrame, natKey: Seq[String],
-                        skCol: String): DataFrame = {
-    val attrs = batch.columns.filterNot(natKey.contains)
-    val cols = (natKey :+ skCol) ++ attrs :+ "_bucket"
-    if (!exists(name) && batch.isEmpty) return batch.withColumn(skCol, lit(0L))
+                        skCol: String): DataFrame =
+    upsert(name, batch, natKey, Some(skCol))
+
+  override def mergeFact(name: String, batch: DataFrame, natKey: Seq[String]): DataFrame =
+    upsert(name, batch, natKey, None)
+
+  /** The one upsert behind [[mergeDim]] and [[mergeFact]] — the
+    * reference's `INSERT … ON CONFLICT … DO UPDATE`, with a dimension's
+    * `RETURNING` serial key as `sk`. The touched buckets of the table and
+    * the batch meet in ONE null-safe full-outer join, projected so that
+    * the batch row wins where present, a stored row the batch does not
+    * touch stays as it is, batch-only columns read NULL on stored rows and
+    * stored-only columns keep their stored value (ADDITIVE evolution:
+    * stored order, new columns appended; shared columns must type-match,
+    * checked inside the CAS loop against the snapshot being committed).
+    *
+    * A dimension adds the column `sk` (natKey, sk, attrs… on disk): the
+    * stored key on matched and untouched rows, `max+i` on fresh rows. Its
+    * join is checkpointed once, observing the fresh count in the same job,
+    * so a batch with no new keys skips [[KeyAssign]]'s partition-sizes
+    * job. A fact keeps the batch's column order and its join stays
+    * unmaterialized: the commit's write executes it exactly once, and the
+    * star pipeline ignores the fact merge's return value. */
+  private def upsert(name: String, batch: DataFrame, natKey: Seq[String],
+                     sk: Option[String]): DataFrame = {
+    // internal marker/prefix names must fail LOUDLY: a user column named
+    // _in_batch would be silently overwritten with lit(1), and a _cur_*
+    // column would collide with the stored-side aliases
+    batch.columns.foreach { c =>
+      require(c != "_in_batch" && !c.startsWith("_cur_"),
+        s"column name '$c' collides with the merge writer's internal " +
+          "markers (_in_batch, _cur_*) — rename it before merging")
+    }
+    sk.foreach { s =>
+      require(!batch.columns.contains(s),
+        s"batch must not carry the surrogate key column '$s' " +
+          "(the merge writer assigns it)")
+      require(!natKey.contains("sk"),
+        "a natural-key column literally named 'sk' collides with the " +
+          "merge writer's _cur_sk marker — rename it before merging")
+    }
+    if (!exists(name) && batch.isEmpty) return sk.fold(batch)(batch.withColumn(_, lit(0L)))
     val (batchB, touched) = materialize(batch.withColumn("_bucket", bucketCol(natKey)))
     if (touched.isEmpty) return read(name) // empty batch over existing table
     val (out, kept) = commitLoop(name, replace = true) {
-      case None =>
-        // KeyAssign over the in-memory batch; the write executes the cheap
-        // id-stamping map, so no further checkpoint is needed
-        val (keyed, n) = KeyAssign.dense(batchB, skCol, 0L)
-        (keyed.select(cols.map(col): _*), touched, n)
+      case None => sk match {
+        case None => (batchB, touched, 0L)
+        case Some(s) =>
+          // KeyAssign over the in-memory batch; the write executes the
+          // cheap id-stamping map, so no further checkpoint is needed
+          val (keyed, n) = KeyAssign.dense(batchB, s, 0L)
+          val attrs = batch.columns.filterNot(natKey.contains)
+          (keyed.select(((natKey :+ s) ++ attrs :+ "_bucket").map(col): _*), touched, n)
+      }
       case Some((maxSk, pairs)) =>
-        // partition pruning: only touched bucket dirs are scanned — and
-        // only ONCE: a single full-outer join captures all three row
-        // classes (known / fresh / untouched), where the previous
-        // left-join + anti-join pair scanned the touched buckets twice and
-        // executed the join in every consuming branch. `_bucket` joins
-        // alongside the natural key (it is a function of it), so both
-        // sides' partition columns coalesce.
+        // partition pruning: only touched bucket dirs are scanned, once
         val curTouched = readPairs(name, pairs, Some(touched))
-        // ADDITIVE schema evolution (SchemaEvolution): batch-only columns
-        // append (stored rows read NULL), stored-only columns are RETAINED
-        // on updated rows and NULL on fresh ones; shared columns must
-        // type-match loudly. Attribute layout: stored order, new appended.
         SchemaEvolution.requireCompatible(name, batchB, curTouched)
-        // internal marker/prefix names must fail LOUDLY: a user column
-        // named _in_batch would be silently overwritten with lit(1), and
-        // a _cur_* column would collide with the stored-side aliases
-        batchB.columns.foreach { c =>
-          require(c != "_in_batch" && !c.startsWith("_cur_"),
-            s"column name '$c' collides with the merge writer's internal " +
-              "markers (_in_batch, _cur_*) — rename it before merging")
-        }
-        val reserved = (natKey :+ skCol) :+ "_bucket"
+        val reserved = (natKey ++ sk) :+ "_bucket"
         val storedFields = curTouched.schema.fields.toSeq
           .filterNot(f => reserved.contains(f.name))
         val batchFields = batchB.schema.fields.toSeq
           .filterNot(f => reserved.contains(f.name))
-        val allAttrs = SchemaEvolution.unionAttrs(storedFields, batchFields)
         val batchHas = batchFields.map(_.name).toSet
         val storedHas = storedFields.map(_.name).toSet
-        require(!batchB.columns.contains(skCol),
-          s"batch must not carry the surrogate key column '$skCol' " +
-            "(the merge writer assigns it)")
-        require(!natKey.contains("sk"),
-          "a natural-key column literally named 'sk' collides with the " +
-            "merge writer's _cur_sk marker — rename it before merging")
-        val keyCols = (natKey :+ skCol).map(col) :+ col("_bucket")
         // NULL-SAFE key match: natural keys come from groupBy-shaped
         // upstreams where NULL is one group, so the merge must treat it
-        // the same way — a plain usingColumns join never matches NULL,
-        // and a NULL-keyed row would re-insert (fresh sk) on EVERY
-        // replay, breaking the effectively-once contract. Stored keys
-        // are aliased aside, matched with <=>, and the canonical key is
-        // the batch side where present (even when legitimately NULL).
+        // the same way — a plain usingColumns join never matches NULL, and
+        // a NULL-keyed row would re-insert on EVERY replay, breaking the
+        // effectively-once contract. Stored columns are aliased aside,
+        // keys matched with <=>, and the canonical key is the batch side
+        // where present (even when legitimately NULL). `_bucket` joins
+        // alongside the natural key (it is a function of it).
         val cur = curTouched.select(
           (natKey.map(k => col(k).as(s"_cur_$k")) :+
             col("_bucket").as("_cur__bucket")) ++
-          (col(skCol).as("_cur_sk") +:
-            storedFields.map(f => col(f.name).as(s"_cur_${f.name}"))): _*)
-        val joinCond = (natKey.map(k => col(k) <=> col(s"_cur_$k")) :+
-          (col("_bucket") === col("_cur__bucket"))).reduce(_ && _)
-        val freshObs = org.apache.spark.sql.Observation()
-        val j0 = batchB.withColumn("_in_batch", lit(1))
-          .join(cur, joinCond, "full_outer")
-        val j = natKey.foldLeft(j0) { (d, k) =>
-            d.withColumn(k, when(col("_in_batch").isNotNull, col(k))
-              .otherwise(col(s"_cur_$k"))).drop(s"_cur_$k")
-          }
-          .withColumn("_bucket", when(col("_in_batch").isNotNull, col("_bucket"))
-            .otherwise(col("_cur__bucket")))
-          .drop("_cur__bucket")
-          .observe(freshObs, count(when(
-            col("_in_batch").isNotNull && col("_cur_sk").isNull, 1)).as("fresh"))
-          .materialized // consumed 3× below + by the write + view
-        val freshCount = Observed.poll(freshObs).flatMap(_.get("fresh"))
-          .map(_.asInstanceOf[Long])
-        val known = j.filter(col("_in_batch").isNotNull && col("_cur_sk").isNotNull)
-          .withColumn(skCol, col("_cur_sk"))
-          .select(keyCols ++ allAttrs.map(f =>
-            (if (batchHas(f.name)) col(f.name)              // batch value wins
-             else col(s"_cur_${f.name}"))                   // retained stored-only
-              .as(f.name)): _*)
-        val knownPart = known
-          .unionByName(j.filter(col("_in_batch").isNull) // untouched rows
-            .withColumn(skCol, col("_cur_sk"))
-            .select(keyCols ++ allAttrs.map(f =>
-              (if (storedHas(f.name)) col(s"_cur_${f.name}")
-               else lit(null).cast(f.dataType))             // new column back-fill
-                .as(f.name)): _*))
-        // steady state has NO new keys in most batches — the observed count
-        // (free: same job as the checkpoint) lets us skip KeyAssign's
-        // partition-sizes job entirely, one fewer job per table per batch
-        if (freshCount.contains(0L)) (knownPart, touched, maxSk)
-        else {
-          val fresh = j.filter(col("_in_batch").isNotNull && col("_cur_sk").isNull)
-          val (freshKeyed, nNew) = KeyAssign.dense(fresh.drop("_cur_sk"), skCol, maxSk)
-          (knownPart.unionByName(freshKeyed.select(keyCols ++ allAttrs.map(f =>
-            (if (batchHas(f.name)) col(f.name)
-             else lit(null).cast(f.dataType)).as(f.name)): _*)),
-            touched, maxSk + nNew)
-        }
-    }
-    view(name, out, kept)
-  }
-
-  override def mergeFact(name: String, batch: DataFrame, natKey: Seq[String]): DataFrame = {
-    val cols = batch.columns.toIndexedSeq :+ "_bucket"
-    if (!exists(name) && batch.isEmpty) return batch
-    val (batchB, touched) = materialize(batch.withColumn("_bucket", bucketCol(natKey)))
-    if (touched.isEmpty) return read(name)
-    val (out, kept) = commitLoop(name, replace = true) {
-      case None =>
-        (batchB.select(cols.map(col): _*), touched, 0L)
-      case Some((maxSk, pairs)) =>
-        // last-write-wins as ONE full-outer join + projection (batch row
-        // wins where present, else the current row) — no anti-join, no
-        // checkpoint: the commit's write executes the join exactly once,
-        // and fact views are rarely re-consumed (the star pipeline ignores
-        // the fact merge's return value). Same ADDITIVE evolution contract
-        // as mergeDim: new batch columns append, batch-omitted stored
-        // columns are retained (updates) / NULL (inserts), type conflicts
-        // fail loudly.
-        val curTouched = readPairs(name, pairs, Some(touched))
-        SchemaEvolution.requireCompatible(name, batchB, curTouched)
-        // same internal-marker guard as mergeDim: fail loudly, not with
-        // an ambiguous-reference error (or worse, silently)
-        batchB.columns.foreach { c =>
-          require(c != "_in_batch" && !c.startsWith("_cur_"),
-            s"column name '$c' collides with the merge writer's internal " +
-              "markers (_in_batch, _cur_*) — rename it before merging")
-        }
-        val reserved = natKey :+ "_bucket"
-        val storedFields = curTouched.schema.fields.toSeq
-          .filterNot(f => reserved.contains(f.name))
-        val batchFields = batchB.schema.fields.toSeq
-          .filterNot(f => reserved.contains(f.name))
-        val allOthers = SchemaEvolution.unionAttrs(storedFields, batchFields)
-        val batchHas = batchFields.map(_.name).toSet
-        val storedHas = storedFields.map(_.name).toSet
-        // null-safe key match — see mergeDim's note (the fact upsert has
-        // the same replay-duplication hazard on NULL-keyed rows)
-        val cur = curTouched.select(
-          (natKey.map(k => col(k).as(s"_cur_$k")) :+
-            col("_bucket").as("_cur__bucket")) ++
+          sk.map(s => col(s).as("_cur_sk")) ++
           storedFields.map(f => col(f.name).as(s"_cur_${f.name}")): _*)
         val joinCond = (natKey.map(k => col(k) <=> col(s"_cur_$k")) :+
           (col("_bucket") === col("_cur__bucket"))).reduce(_ && _)
-        val j0 = batchB.withColumn("_in_batch", lit(1))
+        val j = batchB.withColumn("_in_batch", lit(1))
           .join(cur, joinCond, "full_outer")
-        val j = natKey.foldLeft(j0) { (d, k) =>
-            d.withColumn(k, when(col("_in_batch").isNotNull, col(k))
-              .otherwise(col(s"_cur_$k"))).drop(s"_cur_$k")
-          }
-          .withColumn("_bucket", when(col("_in_batch").isNotNull, col("_bucket"))
-            .otherwise(col("_cur__bucket")))
-          .drop("_cur__bucket")
-        val merged = j.select((natKey :+ "_bucket").map(col) ++ allOthers.map { f =>
-          (if (batchHas(f.name) && storedHas(f.name))
-             when(col("_in_batch").isNotNull, col(f.name))
-               .otherwise(col(s"_cur_${f.name}"))
-           else if (batchHas(f.name))
-             when(col("_in_batch").isNotNull, col(f.name)) // else NULL back-fill
-           else col(s"_cur_${f.name}"))                    // retained / NULL insert
-            .as(f.name)
-        }: _*)
-        (merged, touched, maxSk)
+        val inBatch = col("_in_batch").isNotNull
+        def batchWins(c: String): Column =
+          when(inBatch, col(c)).otherwise(col(s"_cur_$c")).as(c)
+        val merged = natKey.map(batchWins) ++ sk.map(col("_cur_sk").as(_)) ++
+          (batchWins("_bucket") +:
+            SchemaEvolution.unionAttrs(storedFields, batchFields).map { f =>
+              if (!batchHas(f.name)) col(s"_cur_${f.name}").as(f.name) // kept / NULL insert
+              else if (storedHas(f.name)) batchWins(f.name)
+              else when(inBatch, col(f.name)).as(f.name) // NULL back-fill
+            })
+        sk match {
+          case None => (j.select(merged: _*), touched, maxSk)
+          case Some(s) =>
+            val fresh = inBatch && col(s).isNull
+            val freshObs = Observation()
+            val m = j.select(merged :+ col("_in_batch"): _*)
+              .observe(freshObs, count(when(fresh, 1)).as("fresh"))
+              .materialized // consumed by both key classes, the write and view
+            val known = m.filter(!fresh).drop("_in_batch")
+            // steady state has NO new keys in most batches — the observed
+            // count (free: same job as the checkpoint) skips KeyAssign's
+            // partition-sizes job, one fewer job per table per batch
+            if (Observed.poll(freshObs).flatMap(_.get("fresh")).contains(0L))
+              (known, touched, maxSk)
+            else {
+              val (keyed, nNew) =
+                KeyAssign.dense(m.filter(fresh).drop("_in_batch", s), s, maxSk)
+              (known.unionByName(keyed), touched, maxSk + nNew)
+            }
+        }
     }
     view(name, out, kept)
   }

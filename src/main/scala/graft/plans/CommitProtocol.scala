@@ -94,20 +94,30 @@ object CommitProtocol {
     * under the table lock. */
   def reserveVersion(tableDir: String): Long = lockFor(tableDir).synchronized {
     Files.createDirectories(Paths.get(tableDir))
-    val scanned = {
-      val ls = Files.list(Paths.get(tableDir)) // close: one leaked fd per commit adds up
-      try ls.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-        .foldLeft(-1L)(math.max) + 1
-      finally ls.close()
-    }
+    val scanned = versionDirs(tableDir).lastOption.getOrElse(-1L) + 1
     val ctr = versionCounters.computeIfAbsent(tableKey(tableDir), _ => new AtomicLong(-1L))
     val v = math.max(scanned, ctr.get + 1)
     ctr.set(v)
     Files.createDirectories(Paths.get(s"$tableDir/v$v"))
     inFlight.add(s"${tableKey(tableDir)}/v$v")
     v
+  }
+
+  /** Version directories `vN/` on disk under `tableDir` (live, superseded
+    * and crash orphans alike), ascending; empty if the table directory does
+    * not exist. The directory stream is closed: one leaked fd per commit
+    * adds up. */
+  def versionDirs(tableDir: String): Seq[Long] = {
+    val d = Paths.get(tableDir)
+    if (!Files.exists(d)) Nil
+    else {
+      val ls = Files.list(d)
+      try ls.iterator().asScala
+        .map(_.getFileName.toString)
+        .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
+        .toSeq.sorted
+      finally ls.close()
+    }
   }
 
   /** Is `vN/` reserved by a commit that has neither landed nor aborted? */
@@ -166,24 +176,19 @@ object CommitProtocol {
 
   /** Delete version directories the live set does not reference — except
     * in-flight ones. `liveVersions` comes from the store's pointer parse;
-    * `ageMillis` maps a dead version to its age (tombstone- or
+    * `ageMillis` maps a dead version number to its age (tombstone- or
     * mtime-based) for retention. Runs under the table lock so it never
     * interleaves with a commit's check-and-swap. Returns reclaimed
     * version numbers. */
   def vacuumVersions(tableDir: String, liveVersions: Set[Long],
                      retainMillis: Long = 0L,
-                     ageMillis: Path => Long): Seq[Long] =
+                     ageMillis: Long => Long): Seq[Long] =
     lockFor(tableDir).synchronized {
-      if (!Files.exists(Paths.get(tableDir))) return Nil // never-written table: no-op
-      val ls = Files.list(Paths.get(tableDir))
-      val dead = try ls.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("v\\d+"))
-        .filterNot(p => liveVersions.contains(p.getFileName.toString.drop(1).toLong))
-        .filterNot(p => isInFlight(tableDir, p.getFileName.toString))
-        .filter(p => ageMillis(p) >= retainMillis)
-        .toList
-      finally ls.close()
-      dead.foreach(deleteDir)
-      dead.map(_.getFileName.toString.drop(1).toLong)
+      val dead = versionDirs(tableDir)
+        .filterNot(liveVersions.contains)
+        .filterNot(v => isInFlight(tableDir, s"v$v"))
+        .filter(v => ageMillis(v) >= retainMillis)
+      dead.foreach(v => deleteDir(Paths.get(s"$tableDir/v$v")))
+      dead
     }
 }

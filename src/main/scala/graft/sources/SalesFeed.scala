@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,6 +61,15 @@ object SalesFeed {
     * order explicitly (SURVEY.md §7.4.1).
     */
   def readCsv(spark: SparkSession, glob: String): DataFrame = {
+    // expand the glob here: handed the glob literal, Spark's
+    // FileStreamSink.hasMetadata stats it and logs a WARN with a full
+    // FileNotFoundException stack on every read. A glob matching nothing
+    // is passed on as is, so the read still fails with Spark's own
+    // path-not-found error instead of returning an empty frame.
+    val pattern = new Path(glob)
+    val matched = Option(pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(pattern)).toSeq.flatten.map(_.getPath.toString).sorted
+    val paths = if (matched.isEmpty) Seq(glob) else matched
     val raw = spark.read
       .option("header", "true")
       .option("multiLine", "true")
@@ -67,7 +77,7 @@ object SalesFeed {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", graft.streaming.ErrorChannel.corruptCol)
       .schema(rawSchemaWithCorrupt)
-      .csv(glob)
+      .csv(paths: _*)
     withArrivalSeq(raw)
   }
 

@@ -281,7 +281,7 @@ object StreamToStar {
         struct(col("partition").cast("long").as("p"),
           col("offset").as("o")).as("_seq")),
       "value")
-    startForeachBatch(feed, store, checkpoint, audit)
+    startStream(feed, store, checkpoint, Trigger.AvailableNow(), audit)(identity)
   }
 
   /** File-source variant (same pipeline; used for tests and batch replay).
@@ -308,15 +308,7 @@ object StreamToStar {
       .option("columnNameOfCorruptRecord", ErrorChannel.corruptCol)
       .option("maxFilesPerTrigger", filesPerTrigger.toString)
       .csv(glob)
-    raw.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(SalesFeed.withArrivalSeq(batch), store, batchId,
-          if (audit) Some("audit_verdicts") else None)
-      }
-      .start()
+    startStream(raw, store, checkpoint, trigger, audit)(SalesFeed.withArrivalSeq)
   }
 
   /** JSON-lines variant: consumes the Kafka-shaped messages RunProducer
@@ -332,16 +324,8 @@ object StreamToStar {
     val raw = spark.readStream
       .option("maxFilesPerTrigger", "1")
       .text(glob)
-    raw.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(
-          SalesFeed.withArrivalSeq(SalesFeed.fromKafkaMessages(batch)), store,
-          batchId, if (audit) Some("audit_verdicts") else None)
-      }
-      .start()
+    startStream(raw, store, checkpoint, trigger, audit)(b =>
+      SalesFeed.withArrivalSeq(SalesFeed.fromKafkaMessages(b)))
   }
 
   /** T1 parity with the reference's run-until-cancelled service mode
@@ -357,16 +341,22 @@ object StreamToStar {
     startFromJsonFiles(spark, glob, store, checkpoint,
       Trigger.ProcessingTime(interval))
 
-  private def startForeachBatch(
-      feed: DataFrame, store: TableStore, checkpoint: String,
-      audit: Boolean = true): StreamingQuery =
-    feed.writeStream
+  /** The one stream shell: every source runs [[processBatch]] per
+    * micro-batch over `prepare(batch)` (the per-batch arrival-order and
+    * message-decoding step, identity where the source already carries
+    * `_seq`). */
+  private def startStream(
+      stream: DataFrame, store: TableStore, checkpoint: String,
+      trigger: Trigger, audit: Boolean)
+      (prepare: DataFrame => DataFrame): StreamingQuery = {
+    val auditTable = if (audit) Some("audit_verdicts") else None
+    stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
+      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, store, batchId,
-          if (audit) Some("audit_verdicts") else None)
+        processBatch(prepare(batch), store, batchId, auditTable)
       }
       .start()
+  }
 }

@@ -185,6 +185,23 @@ class BucketedMergeWriterSpec extends SparkSpec {
       store.mergeFact("d",
         Seq((3L, "c", 7)).toDF("k", "attr", "_cur_attr"), Seq("k"))
     }
+    // a batch carrying the surrogate key column, and a natural key named
+    // `sk` (it would alias onto the stored key's `_cur_sk`): rejected on
+    // an existing table and on a first batch alike, before any write
+    intercept[IllegalArgumentException] {
+      store.mergeDim("d", Seq((4L, "d", 9L)).toDF("k", "attr", "sk"), Seq("k"), "sk")
+    }
+    intercept[IllegalArgumentException] {
+      store.mergeDim("d", Seq((5L, "e")).toDF("sk", "attr"), Seq("sk"), "attr_key")
+    }
+    intercept[IllegalArgumentException] {
+      store.mergeDim("first1", Seq((4L, "d", 9L)).toDF("k", "attr", "sk"), Seq("k"), "sk")
+    }
+    intercept[IllegalArgumentException] {
+      store.mergeDim("first2", Seq((5L, "e")).toDF("sk", "attr"), Seq("sk"), "attr_key")
+    }
+    assert(!store.exists("first1") && !store.exists("first2"))
+    assert(store.read("d").count() === 1L)
   }
 
   test("vacuum on a never-created table is a no-op (TableStore contract)") {

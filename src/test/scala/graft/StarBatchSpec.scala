@@ -5,7 +5,11 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.plans.{BucketedMergeWriter, StarSchema, TableStore}
 import graft.sources.SalesFeed
@@ -69,6 +73,42 @@ class StarBatchSpec extends SparkSpec {
     assert(last(1L).endsWith("b_0") && last(2L).endsWith("b_2"),
       s"the later file must win: $last")
     assert(last(3L).endsWith("b_3"), s"the later row of the later file must win: $last")
+  }
+
+  test("readCsv expands its glob: no FileStreamSink WARN, same rows and _seq order") {
+    val dir = Files.createTempDirectory("graft-glob").toString
+    SmallStarFeed.write(dir, Seq("b", "a", "c"), nRows = 4)
+    val glob = s"$dir/MOCK_DATA_*.csv"
+    // start the session first: Spark's logging setup reconfigures log4j,
+    // which would drop an appender attached before it
+    spark.sparkContext
+    val sink = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("readCsv-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    sink.addAppender(capture)
+    val feed = try SalesFeed.readCsv(spark, glob)
+      finally { sink.removeAppender(capture); capture.stop() }
+    assert(warns.isEmpty, s"readCsv logged: ${warns.asScala.mkString("; ")}")
+
+    // the same rows, `_seq` included, as Spark's own expansion of the glob
+    val literal = SalesFeed.withArrivalSeq(spark.read
+      .option("header", "true").option("multiLine", "true")
+      .option("columnNameOfCorruptRecord", graft.streaming.ErrorChannel.corruptCol)
+      .schema(SalesFeed.rawSchemaWithCorrupt).csv(glob))
+    val rows = feed.orderBy(col("_seq")).collect().toSeq
+    assert(rows === literal.orderBy(col("_seq")).collect().toSeq)
+    assert(rows.map(_.getAs[String]("customer_last_name")) ===
+      Seq("a", "b", "c").flatMap(f => (1 to 4).map(i => s"L${i}_f$f")))
+    // a glob that matches nothing still fails loudly
+    intercept[AnalysisException](SalesFeed.readCsv(spark, s"$dir/NONE_*.csv"))
   }
 
   /** Delegating store that fails one table's merge as soon as it is called
