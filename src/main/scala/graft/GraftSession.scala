@@ -78,18 +78,73 @@ object GraftSession {
 }
 
 /** Readers for the driver-generated TPC-H-ish star (TESTDATA.md).
-  * Plain `spark.read.parquet` — filters/projections added downstream are
-  * pushed into the scan by Catalyst (PushedFilters / ReadSchema), which is
-  * the load-bearing property at 100 TB: never read columns you don't need.
+  * Filters/projections added downstream are pushed into the scan by
+  * Catalyst (PushedFilters / ReadSchema), which is the load-bearing
+  * property at 100 TB: never read columns you don't need.
+  *
+  * Schema registry. `spark.read.parquet(path)` infers the schema by
+  * reading parquet footers in a Spark job, and every catalog query loads
+  * each of its tables again, so the same unchanged file was inferred once
+  * per query per table. `load` infers a file's schema once and reads it
+  * with that schema afterwards (`spark.read.schema(s).parquet(path)`
+  * starts no job).
+  *   - Cached: the inferred schema, before the `events.ts` normalization.
+  *   - Key: the qualified path plus the session's parquet confs
+  *     (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`), which change
+  *     what inference returns (e.g. `nanosAsLong`). Sessions that differ
+  *     there never share an entry.
+  *   - Freshness: path, length and modification time of every file under
+  *     the path, read on each load. A rewritten file no longer matches, is
+  *     inferred again and replaces its entry.
+  *   - Bound: one entry per key, so the registry grows with the number of
+  *     distinct paths (times conf variants), not with the number of loads.
+  * [[plans.BucketedMergeWriter]] keeps the same kind of registry for its
+  * immutable version directories.
   */
 object Tables {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions.{col, expr}
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+  import org.apache.hadoop.fs.Path
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  private type Stamp = Seq[(String, Long, Long)]
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)]), (Stamp, StructType)]()
+
+  /** The parquet file (or directory) at `path`, read with its registered
+    * schema. A path that does not exist is left to Spark's own reader, so
+    * it fails as `spark.read.parquet` does. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    val stamp: Option[Stamp] =
+      try {
+        val files = fs.listFiles(qualified, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (files.hasNext) {
+          val f = files.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.result())
+      } catch { case _: java.io.FileNotFoundException => None }
+    stamp.fold(spark.read.parquet(path)) { st =>
+      val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      val key = (qualified.toString, confs)
+      val schema = Option(schemas.get(key)).collect { case (`st`, s) => s }.getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, (st, inferred))
+        inferred
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) — which Spark
     * reads as a nanos long under `nanosAsLong` — as TIMESTAMP(µs,
@@ -101,7 +156,7 @@ object Tables {
     * zoned type `unix_micros`/watermarks require), so every consumer sees
     * one µs-TIMESTAMP schema either way. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

@@ -8760,25 +8760,25 @@ object QueryCatalog {
 
   val q264Sql: String = {
     val iters = (0 until 8).map { i =>
-      s"""d$i AS (SELECT coalesce(sum(CAST(pr AS DECIMAL(22,12))), 0) AS dm
+      s"""d$i AS MATERIALIZED (SELECT coalesce(sum(CAST(pr AS DECIMAL(22,12))), 0) AS dm
          |  FROM pr$i WHERE id NOT IN (SELECT src FROM od)),
-         |c$i AS (SELECT e.dst AS id,
+         |c$i AS MATERIALIZED (SELECT e.dst AS id,
          |    sum(CAST(round(pr$i.pr / od.odeg, 12) AS DECIMAL(22,12))) AS s
          |  FROM e JOIN pr$i ON e.src = pr$i.id JOIN od ON od.src = e.src
          |  GROUP BY 1),
-         |pr${i + 1} AS (SELECT nodes.id,
+         |pr${i + 1} AS MATERIALIZED (SELECT nodes.id,
          |    round(0.15 / nn.n + 0.85 * (coalesce(CAST(c$i.s AS DOUBLE), 0) +
          |      round(CAST(d$i.dm AS DOUBLE) / nn.n, 12)), 12) AS pr
          |  FROM nodes CROSS JOIN nn CROSS JOIN d$i
          |    LEFT JOIN c$i ON c$i.id = nodes.id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH edges AS ($linkEdgesSql),
-       |e AS (SELECT DISTINCT src_domain AS src, dst_domain AS dst
+    s"""WITH edges AS MATERIALIZED ($linkEdgesSql),
+       |e AS MATERIALIZED (SELECT DISTINCT src_domain AS src, dst_domain AS dst
        |  FROM edges WHERE src_domain <> dst_domain),
-       |nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-       |od AS (SELECT src, CAST(count(*) AS BIGINT) AS odeg FROM e GROUP BY 1),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |pr0 AS (SELECT id, round(1.0 / nn.n, 12) AS pr FROM nodes CROSS JOIN nn),
+       |nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
+       |od AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS odeg FROM e GROUP BY 1),
+       |nn AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+       |pr0 AS MATERIALIZED (SELECT id, round(1.0 / nn.n, 12) AS pr FROM nodes CROSS JOIN nn),
        |$iters
        |SELECT id AS domain, pr FROM pr8""".stripMargin
   }
@@ -8903,7 +8903,7 @@ object QueryCatalog {
     val urlRe = operators.Urls.UrlRe
     val track = operators.Urls.TrackingParamRe
     s"""WITH $linkFixtureCte,
-       |cand AS (SELECT href,
+       |cand AS MATERIALIZED (SELECT href,
        |    lower(nullif(regexp_extract(href, '$urlRe', 1), '')) AS scheme,
        |    lower(nullif(regexp_extract(href, '$urlRe', 2), '')) AS host,
        |    TRY_CAST(nullif(regexp_replace(regexp_extract(href, '$urlRe', 3), '^:', ''), '') AS BIGINT) AS port,
@@ -8911,7 +8911,7 @@ object QueryCatalog {
        |    nullif(regexp_replace(regexp_extract(href, '$urlRe', 5), '^\\?', ''), '') AS q
        |  FROM x
        |  WHERE lower(nullif(regexp_extract(href, '$urlRe', 1), '')) IN ('http', 'https')),
-       |c AS (SELECT host,
+       |c AS MATERIALIZED (SELECT host,
        |    scheme || '://' || regexp_replace(host, '\\.$$', '') ||
        |    (CASE WHEN port IS NULL
        |            OR (scheme = 'http' AND port = 80)
@@ -8925,15 +8925,15 @@ object QueryCatalog {
        |               x -> x <> '' AND NOT regexp_matches(x, '$track'))), '&')
        |          ELSE '' END) AS canonical
        |  FROM cand),
-       |k AS (SELECT ${etld1SqlOf("host")} AS domain, canonical,
+       |k AS MATERIALIZED (SELECT ${etld1SqlOf("host")} AS domain, canonical,
        |    CAST(count(*) AS BIGINT) AS n_refs
        |  FROM c GROUP BY 1, 2),
-       |r AS (SELECT domain, CAST(sum(n_refs) AS BIGINT) AS n_links,
+       |r AS MATERIALIZED (SELECT domain, CAST(sum(n_refs) AS BIGINT) AS n_links,
        |    CAST(count(*) AS BIGINT) AS n_distinct_urls,
        |    CAST(sum(CASE WHEN CAST(('0x' || substring(md5('frontier' || canonical), 1, 12)) AS BIGINT) % 1000000 < 500000
        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
        |  FROM k GROUP BY 1),
-       |prq AS (SELECT * FROM ($q264Sql))
+       |prq AS MATERIALIZED (SELECT * FROM ($q264Sql))
        |SELECT r.domain, n_links, n_distinct_urls, n_kept, prq.pr
        |FROM r LEFT JOIN prq ON r.domain = prq.domain""".stripMargin
   }

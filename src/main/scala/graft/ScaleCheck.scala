@@ -26,8 +26,8 @@ object ScaleCheck {
       if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       else None
     val spark = GraftSession.local("graft-scale-check")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val docs = Tables.load(spark, dir, "documents")
+    val emb = Tables.load(spark, dir, "embeddings")
     val nEmb = emb.count()
 
     // hold expected bucket occupancy at ~32 vectors: planes = log2(n/32)

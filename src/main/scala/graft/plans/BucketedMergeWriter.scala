@@ -569,9 +569,6 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
       require(!batch.columns.contains(s),
         s"batch must not carry the surrogate key column '$s' " +
           "(the merge writer assigns it)")
-      require(!natKey.contains("sk"),
-        "a natural-key column literally named 'sk' collides with the " +
-          "merge writer's _cur_sk marker — rename it before merging")
     }
     if (!exists(name) && batch.isEmpty) return sk.fold(batch)(batch.withColumn(_, lit(0L)))
     val (batchB, touched) = materialize(batch.withColumn("_bucket", bucketCol(natKey)))
@@ -608,7 +605,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
         val cur = curTouched.select(
           (natKey.map(k => col(k).as(s"_cur_$k")) :+
             col("_bucket").as("_cur__bucket")) ++
-          sk.map(s => col(s).as("_cur_sk")) ++
+          sk.map(s => col(s).as(s"_cur_$s")) ++
           storedFields.map(f => col(f.name).as(s"_cur_${f.name}")): _*)
         val joinCond = (natKey.map(k => col(k) <=> col(s"_cur_$k")) :+
           (col("_bucket") === col("_cur__bucket"))).reduce(_ && _)
@@ -617,7 +614,7 @@ class BucketedMergeWriter(spark: SparkSession, root: String, nBuckets: Int = 16,
         val inBatch = col("_in_batch").isNotNull
         def batchWins(c: String): Column =
           when(inBatch, col(c)).otherwise(col(s"_cur_$c")).as(c)
-        val merged = natKey.map(batchWins) ++ sk.map(col("_cur_sk").as(_)) ++
+        val merged = natKey.map(batchWins) ++ sk.map(s => col(s"_cur_$s").as(s)) ++
           (batchWins("_bucket") +:
             SchemaEvolution.unionAttrs(storedFields, batchFields).map { f =>
               if (!batchHas(f.name)) col(s"_cur_${f.name}").as(f.name) // kept / NULL insert

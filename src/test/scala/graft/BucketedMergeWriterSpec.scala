@@ -185,23 +185,38 @@ class BucketedMergeWriterSpec extends SparkSpec {
       store.mergeFact("d",
         Seq((3L, "c", 7)).toDF("k", "attr", "_cur_attr"), Seq("k"))
     }
-    // a batch carrying the surrogate key column, and a natural key named
-    // `sk` (it would alias onto the stored key's `_cur_sk`): rejected on
-    // an existing table and on a first batch alike, before any write
+    // a batch carrying the surrogate key column: rejected on an existing
+    // table and on a first batch alike, before any write
     intercept[IllegalArgumentException] {
       store.mergeDim("d", Seq((4L, "d", 9L)).toDF("k", "attr", "sk"), Seq("k"), "sk")
     }
     intercept[IllegalArgumentException] {
-      store.mergeDim("d", Seq((5L, "e")).toDF("sk", "attr"), Seq("sk"), "attr_key")
-    }
-    intercept[IllegalArgumentException] {
       store.mergeDim("first1", Seq((4L, "d", 9L)).toDF("k", "attr", "sk"), Seq("k"), "sk")
     }
-    intercept[IllegalArgumentException] {
-      store.mergeDim("first2", Seq((5L, "e")).toDF("sk", "attr"), Seq("sk"), "attr_key")
-    }
-    assert(!store.exists("first1") && !store.exists("first2"))
+    assert(!store.exists("first1"))
     assert(store.read("d").count() === 1L)
+  }
+
+  test("a column named sk, as attribute or natural key, merges again and keeps its keys") {
+    // the stored surrogate key is aliased `_cur_<skCol>`; a user column
+    // literally named `sk` aliases to `_cur_sk` and must not collide
+    val store = new BucketedMergeWriter(spark, freshRoot(), nBuckets = 4)
+    val first = store.mergeDim("d", Seq((1L, "a"), (2L, "b")).toDF("k", "sk"), Seq("k"), "d_key")
+      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("d_key")).toMap
+    val second = store.mergeDim("d", Seq((2L, "b2"), (3L, "c")).toDF("k", "sk"), Seq("k"), "d_key")
+      .collect().map(r => r.getAs[Long]("k") -> (r.getAs[Long]("d_key"), r.getAs[String]("sk")))
+      .toMap
+    assert(second(1L) === (first(1L), "a"))
+    assert(second(2L) === (first(2L), "b2"))
+    assert(second(3L)._1 === 3L)
+    assert(second.values.map(_._1).toSet === Set(1L, 2L, 3L))
+
+    // a natural key named `sk`, on a first batch and on the merge after it
+    store.mergeDim("n", Seq((5L, "e")).toDF("sk", "attr"), Seq("sk"), "attr_key")
+    val n = store.mergeDim("n", Seq((5L, "e2"), (6L, "f")).toDF("sk", "attr"), Seq("sk"), "attr_key")
+      .collect().map(r => r.getAs[Long]("sk") -> (r.getAs[Long]("attr_key"), r.getAs[String]("attr")))
+      .toMap
+    assert(n === Map(5L -> (1L, "e2"), 6L -> (2L, "f")))
   }
 
   test("vacuum on a never-created table is a no-op (TableStore contract)") {
